@@ -2,6 +2,61 @@ package graft
 import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 object Bench {
+
+  /** Times `run` k times and returns the per-sample seconds, or the error
+    * of the first sample that throws. A throwing sample ends the lane and
+    * discards the samples before it: its elapsed time measures how fast the
+    * lane failed, not what it costs, so a failing lane must never reach a
+    * median or the suite total.
+    */
+  private[graft] def sampleLane(k: Int)(run: () => Unit): Either[Throwable, Seq[Double]] =
+    try Right((1 to k).map { _ =>
+      val t0 = System.nanoTime()
+      run()
+      (System.nanoTime() - t0) / 1e9
+    })
+    catch { case e: Throwable => Left(e) }
+
+  /** The final stdout line: MUST be the last output and MUST fit the
+    * driver's 2000-char stdout tail, or BENCH_r*.json records
+    * "parsed": null (rounds 7-9 all did). The full 278-lane medians map
+    * is ~7 KB, so the line carries the failed lanes first, then the
+    * SLOWEST lanes (the informative ones), up to a hard character budget,
+    * and points at the full artifact for the rest. The header's counts
+    * say how many of each exist.
+    */
+  private[graft] def summaryLine(total: Double, k: Int, sfName: String,
+                                 outPath: String, medians: Seq[(String, Double)],
+                                 failed: Seq[String], budget: Int = 1800): String = {
+    val sb = new StringBuilder(
+      s"""{"metric":"total","value":${math.rint(total * 1000) / 1000},""" +
+        s""""unit":"sec","k":$k,"stat":"median","sf":"$sfName",""" +
+        s""""queries_total":${medians.size},"failed_total":${failed.size},""" +
+        s""""artifact":"$outPath","failed":[""")
+    // Entries are appended while the line stays `reserve` chars under the
+    // budget; the slack covers the closing suffix (and, for the failed
+    // list, the opening of the queries map).
+    def appendWithin(entries: Iterator[String], reserve: Int): Int = {
+      var shown = 0
+      var done = false
+      while (!done && entries.hasNext) {
+        val e = entries.next()
+        if (sb.length + e.length + reserve > budget) done = true
+        else {
+          if (shown > 0) sb.append(',')
+          sb.append(e); shown += 1
+        }
+      }
+      shown
+    }
+    appendWithin(failed.iterator.map(n => s"\"$n\""), 80)
+    sb.append("""],"queries":{""")
+    val shown = appendWithin(medians.sortBy(-_._2).iterator
+      .map { case (n, v) => s"\"$n\":${math.rint(v * 1000) / 1000}" }, 40)
+    sb.append(s"""},"queries_shown":$shown}""")
+    sb.toString
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -30,13 +85,6 @@ object Bench {
       // cleaner pacing and stays only as a long-stop fallback, env-tunable.
       .config("spark.cleaner.periodicGC.interval",
         sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "30min"))
-      // AQE small-partition coalescing mode (r14 A/B knob): Spark's
-      // default parallelismFirst=true ignores the advisory size and keeps
-      // tiny shuffles at defaultParallelism tasks; "false" sizes
-      // post-shuffle partitions from bytes (guide §2.2: 100MB-1GB
-      // partitions, let AQE coalesce). Env-gated for measurement.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PF", "true"))
     if (big) {
       // Let AQE size shuffles from runtime stats: big stages START at 8×
       // cores so no single sort partition holds tens of millions of rows
@@ -113,6 +161,18 @@ object Bench {
         lastSweep = System.nanoTime()
       }
     }
+    // noop sink: forces full evaluation of every output column (a count()
+    // would let Catalyst prune projection-heavy work out of the measurement)
+    def runLane(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)(): Unit =
+      fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+    // A lane that throws — in warm-up or in any timed sample — is listed
+    // under "failed" and kept out of the medians and the total; a failure
+    // in warm-up skips its timed samples.
+    val failed = mutable.LinkedHashSet[String]()
+    def fail(phase: String, name: String, e: Throwable): Unit = {
+      System.err.println(s"[bench] $phase $name: ${e.getMessage}")
+      failed += name
+    }
     // Per-lane warm-up seconds are recorded into the artifact: a lane whose
     // first pass builds a session-shared stage pays that build HERE, so the
     // suite's true cost stays inspectable next to the warm medians
@@ -121,11 +181,10 @@ object Bench {
     if (sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1") != "0") {
       selected.foreach { case (name, fn) =>
         sweepIfPressured()
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] warmup $name: ${e.getMessage}") }
-        warmupSecs(name) = (System.nanoTime() - t0) / 1e9
+        sampleLane(1)(runLane(fn)) match {
+          case Right(xs) => warmupSecs(name) = xs.head
+          case Left(e) => fail("warmup", name, e)
+        }
       }
     }
     // Per-lane JVM GC seconds over the k timed samples (all collectors):
@@ -137,20 +196,17 @@ object Bench {
         .asScala.map(_.getCollectionTime.max(0L)).sum
     }
     val gcSecs = mutable.LinkedHashMap[String, Double]()
-    val results = selected.map { case (name, fn) =>
-      sweepIfPressured()
-      val gc0 = gcMillis
-      val samples = (1 to k).map { _ =>
-        val t0 = System.nanoTime()
-        // noop sink: forces full evaluation of every output column (a count()
-        // would let Catalyst prune projection-heavy work out of the measurement)
-        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case e: Throwable => System.err.println(s"[bench] $name: ${e.getMessage}") }
-        (System.nanoTime() - t0) / 1e9
+    val results = selected.filter { case (n, _) => !failed.contains(n) }
+      .flatMap { case (name, fn) =>
+        sweepIfPressured()
+        val gc0 = gcMillis
+        val run = sampleLane(k)(runLane(fn))
+        gcSecs(name) = (gcMillis - gc0) / 1e3
+        run match {
+          case Right(samples) => Some(name -> samples)
+          case Left(e) => fail("sample", name, e); None
+        }
       }
-      gcSecs(name) = (gcMillis - gc0) / 1e3
-      name -> samples
-    }
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
@@ -168,6 +224,7 @@ object Bench {
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""k":$k,"stat":"median","samples":$samplesJson,"sf":"$sfDir",""" +
       s""""gc_sec":${numMap(gcSecs)},"warmup_sec":${numMap(warmupSecs)},""" +
+      s""""failed":${failed.map(n => s"\"$n\"").mkString("[", ",", "]")},""" +
       s""""stage_build_sec":${numMap(graft.runtime.Stage.buildLedger)},""" +
       s""""sweeps":{"count":$sweepCount,"sec":${math.rint(sweepSecTotal * 1000) / 1000}}}"""
     // Machine-readable full artifact: the driver's stdout tail keeps only
@@ -183,33 +240,9 @@ object Bench {
       val w = new java.io.PrintWriter(f, "UTF-8")
       try w.println(line) finally w.close()
     } catch { case e: Exception => System.err.println(s"[bench] artifact write failed: $e") }
-    // Final stdout line — MUST be the last output and MUST fit the
-    // driver's 2000-char stdout tail, or BENCH_r*.json records
-    // "parsed": null (rounds 7-9 all did). The full 278-lane medians map
-    // is ~7 KB, so the line carries the SLOWEST lanes (the informative
-    // ones) up to a hard character budget and points at the full
-    // artifact for the rest. Spark's own logging goes to stderr, so
-    // nothing follows this line on stdout.
-    val budget = 1800
-    val header = s"""{"metric":"total","value":${math.rint(total * 1000) / 1000},""" +
-      s""""unit":"sec","k":$k,"stat":"median","sf":"$sfName",""" +
-      s""""queries_total":${medians.size},"artifact":"$outPath","queries":{"""
-    val entries = medians.toSeq.sortBy(-_._2).iterator
-      .map { case (n, v) => s"\"$n\":${math.rint(v * 1000) / 1000}" }
-    val sb = new StringBuilder(header)
-    var shown = 0
-    var done = false
-    while (!done && entries.hasNext) {
-      val e = entries.next()
-      // +40 slack for the closing "},"queries_shown":NNN}" suffix
-      if (sb.length + e.length + 40 > budget) done = true
-      else {
-        if (shown > 0) sb.append(',')
-        sb.append(e); shown += 1
-      }
-    }
-    sb.append(s"""},"queries_shown":$shown}""")
-    println(sb.toString)
+    // Spark's own logging goes to stderr, so nothing follows this line on
+    // stdout.
+    println(summaryLine(total, k, sfName, outPath, medians.toSeq, failed.toSeq))
     spark.stop()
   }
 }

@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   *    (band, key): only docs sharing a band collide. Band keys are md5
   *    strings, so the hash family is engine-portable (the DuckDB oracle
   *    computes the identical signatures).
-  *  - Exact Jaccard runs only on candidate pairs (explode shingles →
-  *    equi-join → group count), never on the full cross product.
+  *  - Exact Jaccard runs only on candidate pairs (two doc-keyed joins
+  *    against per-doc shingle arrays, intersected per row), never on the
+  *    full cross product.
   */
 object Dedup {
 
@@ -133,7 +134,7 @@ object Dedup {
           .filter(col("_hr") <= numHubs)
           .select(col("band"), col("key"), col(idCol).as("_hub"))
       }
-    lshStarCandidatesOn(bands, hubs, idCol)
+    lshStarCandidates(starJoined(bands, hubs), idCol)
   }
 
   /** Single-hub (h=1) bucket hubs over a prebuilt [[bandRows]] table — the
@@ -147,7 +148,8 @@ object Dedup {
   def starHubs(bands: DataFrame, idCol: String): DataFrame =
     bands.groupBy(col("band"), col("key")).agg(min(col(idCol)).as("_hub"))
 
-  /** [[lshStarCandidatesOn]]'s shared input: every band row with its
+  /** The band-level input of [[lshStarCandidates]] and
+    * [[lshStarRescueCandidates]]: every band row with its
     * bucket's hub attached — (idCol, band, key, _hub). The r14 single
     * materialization behind the whole star+rescue posture: the star
     * candidates (filter id > hub), the rescue incidence probe (semi-join
@@ -159,29 +161,25 @@ object Dedup {
   def starJoined(bands: DataFrame, hubs: DataFrame): DataFrame =
     bands.join(hubs, Seq("band", "key"))
 
-  /** [[lshStarCandidates]]' join phase over prebuilt bands + hubs —
-    * result-identical to the sigs-input form (same join, filter, distinct);
-    * split out so callers can reuse one persisted band/hub build across the
-    * star, rescue and cross-probe passes.
+  /** Star candidates over a prebuilt (typically persisted) [[starJoined]]
+    * frame — the join phase of the signature-level entry above. Callers
+    * running several passes over one band build (q288: star, rescue and
+    * cross probe) call it directly so the hub join runs once.
     */
-  def lshStarCandidatesOn(bands: DataFrame, hubs: DataFrame,
-                          idCol: String): DataFrame =
-    lshStarCandidatesOnJoined(starJoined(bands, hubs), idCol)
-
-  /** [[lshStarCandidatesOn]] over a prebuilt (typically persisted)
-    * [[starJoined]] frame — result-identical.
-    */
-  def lshStarCandidatesOnJoined(withHub: DataFrame, idCol: String): DataFrame =
+  def lshStarCandidates(withHub: DataFrame, idCol: String): DataFrame =
     withHub.filter(col(idCol) > col("_hub"))
       .select(col("_hub").as("doc_a"), col(idCol).as("doc_b")).distinct()
 
   /** Rescue-wave candidates — the detached-member fix that makes the star
     * graph's clusters EXACTLY the pair-complete ([[lshCandidates]]) clusters
-    * at candidate-linear + failure-proportional cost. `failedEdges` is the
-    * set of star edges (doc_a = hub, doc_b = member) that failed the τ
-    * threshold; the member re-probes THE BUCKET WHOSE hub edge failed,
-    * pairing with every non-hub co-member of that bucket. Returns
-    * (doc_a < doc_b), distinct.
+    * at candidate-linear + failure-proportional cost. `withHub` is the
+    * [[starJoined]] frame over single-hub [[starHubs]] (the rescue is
+    * defined relative to the h=1 star graph); `failedEdges` is the set of
+    * star edges (doc_a = hub, doc_b = member) that failed the τ threshold.
+    * The member re-probes THE BUCKET WHOSE hub edge failed, pairing with
+    * every non-hub co-member of that bucket. Returns (doc_a < doc_b),
+    * distinct. The incidence probe and the pair join both read the
+    * hub-joined band rows, so the hub column is already on every row.
     *
     * Exactness theorem (pinned in ExtSpec, recomputed by check_q286): let
     * E70 be the thresholded pair-complete edge set and E* = thresholded
@@ -207,32 +205,8 @@ object Dedup {
     * already star edges, and in buckets where it is a member its failures
     * there are member-side failures.
     */
-  def lshStarRescueCandidates(sigs: DataFrame, idCol: String,
-                              numHashes: Int, bandSize: Int,
+  def lshStarRescueCandidates(withHub: DataFrame, idCol: String,
                               failedEdges: DataFrame): DataFrame = {
-    val bands = bandRows(sigs, idCol, numHashes, bandSize)
-    // Same partial-aggregatable hub groupBy as lshStarCandidates h=1 — the
-    // rescue is defined relative to the single-hub star graph.
-    lshStarRescueCandidatesOn(bands, starHubs(bands, idCol), idCol, failedEdges)
-  }
-
-  /** [[lshStarRescueCandidates]] over prebuilt bands + single-hub hubs —
-    * result-identical; split out (like [[lshStarCandidatesOn]]) so the
-    * star and rescue passes share one persisted band/hub build.
-    */
-  def lshStarRescueCandidatesOn(bands: DataFrame, hubs: DataFrame,
-                                idCol: String,
-                                failedEdges: DataFrame): DataFrame =
-    lshStarRescueCandidatesOnJoined(starJoined(bands, hubs), idCol, failedEdges)
-
-  /** [[lshStarRescueCandidatesOn]] over a prebuilt (typically persisted)
-    * [[starJoined]] frame — result-identical: the incidence probe and the
-    * pair join both read the hub-joined band rows, so the former
-    * bands ⋈ fb ⋈ hubs chain collapses to withHub ⋈ fb (the hub column is
-    * already on the row).
-    */
-  def lshStarRescueCandidatesOnJoined(withHub: DataFrame, idCol: String,
-                                      failedEdges: DataFrame): DataFrame = {
     // (bucket, member) incidences whose own hub edge failed: the semi-join
     // keys on BOTH endpoints, so only the failing bucket re-probes.
     val fb = withHub.join(failedEdges,
@@ -248,74 +222,52 @@ object Dedup {
       .distinct()
   }
 
-  /** Exact Jaccard size prefilter: j(A,B) ≥ τ forces |A| ≥ τ·|B| and
-    * |B| ≥ τ·|A| (intersection ≤ min size), so pairs whose shingle-set
-    * sizes are more than 1/τ apart CANNOT pass and need no intersection
-    * join. Provably drops only sub-τ pairs — output-invariant for any
-    * consumer that thresholds at ≥ τ — and costs two size-table hash
-    * joins instead of a pairs×shingles explode. τ is passed as an exact
-    * rational (num/den: τ = num/den, e.g. 1/2) so the integer-arithmetic
-    * comparison has no float edge cases.
+  /** Exact Jaccard size predicate, folded into [[jaccardOnArrays]]'s `tau`
+    * filter: j(A,B) ≥ τ forces |A| ≥ τ·|B| and |B| ≥ τ·|A| (intersection ≤
+    * min size), so pairs whose shingle-set sizes are more than 1/τ apart
+    * CANNOT pass and need no intersection. Provably drops only sub-τ pairs
+    * — output-invariant for any consumer that thresholds at ≥ τ. τ is
+    * passed as an exact rational (num/den: τ = num/den, e.g. 1/2) so the
+    * integer-arithmetic comparison has no float edge cases. The test
+    * sources' exploded-row reference prefilter calls this same definition,
+    * so the two can never desynchronize (ADVICE r13).
     *
     * Rounding caveat (ADVICE r12): consumers threshold on
-    * `round(jaccard, 6)` ([[jaccardOnShingles]]'s default), and half-up
+    * `round(jaccard, 6)` ([[jaccardOnArrays]]'s default), and half-up
     * rounding admits true jaccard as low as τ − 0.5e-6. The comparison is
     * therefore widened by that margin — it keeps every pair with
     * min/max ≥ τ − 0.5e-6, i.e. min·den·2e6 ≥ max·(num·2e6 − den) — so
     * output-invariance holds for the ROUNDED threshold too, not just the
-    * unrounded one. Long arithmetic: sizes < 2^31 and den·2e6 < 2^62/2^31.
-    */
-  def jaccardSizePrefilter(pairs: DataFrame, sh: DataFrame,
-                           tauNum: Int, tauDen: Int): DataFrame = {
-    val sizes = sh.groupBy(col("_id")).agg(count(lit(1)).as("_n"))
-    pairs
-      .join(sizes.withColumnRenamed("_id", "doc_a").withColumnRenamed("_n", "_na"), "doc_a")
-      .join(sizes.withColumnRenamed("_id", "doc_b").withColumnRenamed("_n", "_nb"), "doc_b")
-      .filter(tauSizePredicate(col("_na"), col("_nb"), tauNum, tauDen))
-      .select(col("doc_a"), col("doc_b"))
-  }
-
-  /** The widened τ size comparison shared by [[jaccardSizePrefilter]] and
-    * [[jaccardOnArrays]]'s folded `tau` filter (ADVICE r13: one definition,
-    * so the rounding-slack margin can never desynchronize between the two
-    * output-invariance guarantees). The 2·10⁶ factor is twice the 10⁶ of
-    * the default roundTo=6 — see the rounding caveat above; a caller that
-    * changes roundTo must widen this margin with it.
+    * unrounded one. The 2·10⁶ factor is twice the 10⁶ of roundTo=6; a
+    * caller that changes roundTo must widen this margin with it. Long
+    * arithmetic: sizes < 2^31 and den·2e6 < 2^62/2^31.
     */
   private[graft] def tauSizePredicate(na: Column, nb: Column,
                                       tauNum: Int, tauDen: Int): Column =
     least(na, nb) * lit(tauDen.toLong * 2000000L) >=
       greatest(na, nb) * lit(tauNum.toLong * 2000000L - tauDen.toLong)
 
-  /** Asymmetric LSH candidates — the incremental-ingestion cut: INCOMING
-    * docs probe the EXISTING base corpus's bands, never each other. Returns
-    * (doc_a = incoming id, doc_b = base id), distinct; no `<` constraint
-    * because the two id sets are disjoint by contract. Same banding as
-    * [[lshCandidates]]; per-batch cost is O(|batch| · bands) probe rows
-    * against the base band table, not a corpus self-join.
+  /** Asymmetric LSH candidates over prebuilt [[bandRows]] tables — the
+    * incremental-ingestion cut: INCOMING docs probe the EXISTING base
+    * corpus's bands, never each other. Returns (doc_a = incoming id,
+    * doc_b = base id), distinct; no `<` constraint because the two id sets
+    * are disjoint by contract. Same banding as [[lshCandidates]]; per-batch
+    * cost is O(|batch| · bands) probe rows against the base band table, not
+    * a corpus self-join. The caller may wrap the incoming side in
+    * `broadcast(...)`: a batch is small relative to the base corpus by the
+    * incremental contract, and broadcasting it turns the probe into a
+    * map-side join over the base band table instead of shuffling the (much
+    * larger) base side by (band, key) (guide §3.1).
     */
-  def lshCandidatesAgainst(incoming: DataFrame, base: DataFrame, idCol: String,
-                           numHashes: Int, bandSize: Int): DataFrame =
-    lshCandidatesAgainstOn(bandRows(incoming, idCol, numHashes, bandSize),
-      bandRows(base, idCol, numHashes, bandSize), idCol)
-
-  /** [[lshCandidatesAgainst]] over prebuilt band tables — result-identical;
-    * split out so an incremental caller reuses one persisted band build for
-    * the intra-part star/rescue passes AND the cross probe. The caller may
-    * wrap the incoming side in `broadcast(...)`: a batch is small relative
-    * to the base corpus by the incremental contract, and broadcasting it
-    * turns the probe into a map-side join over the base band table instead
-    * of shuffling the (much larger) base side by (band, key) (guide §3.1).
-    */
-  def lshCandidatesAgainstOn(incomingBands: DataFrame, baseBands: DataFrame,
-                             idCol: String): DataFrame = {
+  def lshCandidatesAgainst(incomingBands: DataFrame, baseBands: DataFrame,
+                           idCol: String): DataFrame = {
     val a = incomingBands.select(col(idCol).as("doc_a"), col("band"), col("key"))
     val b = baseBands.select(col(idCol).as("doc_b"), col("band"), col("key"))
     a.join(b, Seq("band", "key")).select("doc_a", "doc_b").distinct()
   }
 
   /** One row per (doc, band) with the band's concatenated signature key —
-    * the shared explode behind both candidate joins. Public since r14 so
+    * the shared explode behind every candidate join. Public since r14 so
     * multi-pass consumers (q288's incremental posture: base star + base
     * rescue + batch star + batch rescue + cross probe all band the same
     * signatures) can persist ONE band table per scope instead of
@@ -332,42 +284,22 @@ object Dedup {
       .select(col(idCol), col("bk.band").as("band"), col("bk.key").as("key"))
   }
 
-  /** Exploded DISTINCT shingle rows (_id, _s) per document — the input both
-    * the candidate-pair Jaccard and the pair-set Jaccard consume. Exposed so
-    * callers can persist/share one materialization across queries.
-    */
-  def shingleRows(docs: DataFrame, idCol: String, textCol: Column,
-                  shingleSize: Int): DataFrame =
-    docs.select(col(idCol).as("_id"),
-      explode(array_distinct(shingles(Tokenizer.tokens(textCol), shingleSize))).as("_s"))
-
   /** DISTINCT shingle set per document as ONE array row (_id, _sa) — the
-    * narrow-join twin of [[shingleRows]]. Derived per-row from the docs
-    * (no shuffle at any scale); a document's shingle set is bounded by its
-    * own length, so the row stays executor-friendly even on crawl docs.
+    * scoring input of [[jaccardOnArrays]]; `explode(_sa)` gives the
+    * shingle-keyed rows (q269's truth-pair join). Derived per-row from the
+    * docs (no shuffle at any scale); a document's shingle set is bounded by
+    * its own length, so the row stays executor-friendly even on crawl docs.
     */
   def shingleArrays(docs: DataFrame, idCol: String, textCol: Column,
                     shingleSize: Int): DataFrame =
     docs.select(col(idCol).as("_id"),
       array_distinct(shingles(Tokenizer.tokens(textCol), shingleSize)).as("_sa"))
 
-  /** Exact shingle-set Jaccard for given (doc_a, doc_b) candidate pairs:
-    * explode distinct shingles per doc, equi-join, count; |A∩B|/(|A|+|B|-|A∩B|).
-    */
-  def jaccard(pairs: DataFrame, docs: DataFrame, idCol: String, textCol: Column,
-              shingleSize: Int, roundTo: Int = 6): DataFrame = {
-    // Array form: the per-doc shingle set feeds both pair sides; persist so
-    // tokenize+shingle runs once per job, not twice. Bounded: |docs| rows,
-    // one bounded array each. Result-identical to the exploded-row form —
-    // see jaccardOnArrays.
-    val arrs = graft.runtime.Stage.scopedPersist(
-      shingleArrays(docs, idCol, textCol, shingleSize))
-    jaccardOnArrays(pairs, arrs, roundTo)
-  }
-
-  /** Exact Jaccard over a prebuilt per-doc shingle-ARRAY table from
-    * [[shingleArrays]] — result-identical to [[jaccardOnShingles]] over the
-    * exploded form (same integer |A∩B|/|A|/|B|, same double division and
+  /** Exact Jaccard for given (doc_a, doc_b) candidate pairs over a prebuilt
+    * per-doc shingle-ARRAY table from [[shingleArrays]]:
+    * |A∩B|/(|A|+|B|−|A∩B|), rounded to `roundTo` places. Result-identical
+    * to the exploded-row form kept in the test sources as its parity
+    * reference (same integer |A∩B|/|A|/|B|, same double division and
     * rounding; pairs with an empty/absent shingle set on either side are
     * dropped exactly as the exploded form's inner size join drops them).
     *
@@ -384,12 +316,11 @@ object Dedup {
     *
     * `tau` (num, den): optional exact-rational size prefilter applied
     * BETWEEN the joins and BEFORE the intersection — the
-    * [[jaccardSizePrefilter]] predicate (incl. its rounding-slack margin)
-    * rendered as a per-row filter on the already-joined sizes, so pairs
-    * that provably cannot reach τ skip the intersect entirely and no
-    * extra size-table joins exist at all. Output-invariant for consumers
-    * thresholding at ≥ τ on the rounded jaccard, exactly as documented on
-    * [[jaccardSizePrefilter]].
+    * [[tauSizePredicate]] (incl. its rounding-slack margin) as a per-row
+    * filter on the already-joined sizes, so pairs that provably cannot
+    * reach τ skip the intersect entirely and no extra size-table joins
+    * exist at all. Output-invariant for consumers thresholding at ≥ τ on
+    * the rounded jaccard, as documented on [[tauSizePredicate]].
     */
   def jaccardOnArrays(pairs: DataFrame, arrs: DataFrame, roundTo: Int = 6,
                       tau: Option[(Int, Int)] = None): DataFrame = {
@@ -407,29 +338,6 @@ object Dedup {
     prefiltered
       .withColumn("_inter",
         size(array_intersect(col("_saa"), col("_sab"))).cast("long"))
-      .withColumn("jaccard", round(col("_inter").cast("double")
-        / (col("_na") + col("_nb") - col("_inter")), roundTo))
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-  }
-
-  /** Jaccard over a prebuilt (and typically persisted/shared) shingle-row
-    * table from [[shingleRows]].
-    */
-  def jaccardOnShingles(pairs: DataFrame, sh: DataFrame, roundTo: Int = 6): DataFrame = {
-    val sizes = sh.groupBy("_id").agg(count(lit(1)).as("_n"))
-    // Shingle equality is part of the join condition (hash join on
-    // (doc, shingle)) — NOT a post-join filter, which would cross every
-    // shingle of a with every shingle of b per candidate pair.
-    val shB = sh.select(col("_id").as("doc_b"), col("_s"))
-    val inter = pairs
-      .join(sh.withColumnRenamed("_id", "doc_a"), "doc_a")
-      .join(shB, Seq("doc_b", "_s"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("_inter"))
-    pairs
-      .join(inter, Seq("doc_a", "doc_b"), "left")
-      .na.fill(0L, Seq("_inter"))
-      .join(sizes.withColumnRenamed("_id", "doc_a").withColumnRenamed("_n", "_na"), "doc_a")
-      .join(sizes.withColumnRenamed("_id", "doc_b").withColumnRenamed("_n", "_nb"), "doc_b")
       .withColumn("jaccard", round(col("_inter").cast("double")
         / (col("_na") + col("_nb") - col("_inter")), roundTo))
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
@@ -473,9 +381,8 @@ object Dedup {
     * when no label changes. Rounds = graph diameter — duplicate clusters are
     * shallow (near-clique), so this terminates in a few rounds; each round
     * is one shuffle join, the standard BSP formulation that scales to
-    * billions of edges (the large-star/small-star variant halves rounds if
-    * diameters ever get long). The convergence probe is a `limit(1).count`,
-    * not a full materialization.
+    * billions of edges. The convergence probe is a `limit(1).count`, not a
+    * full materialization.
     *
     * The iteration runs ONLY over vertices incident to at least one edge:
     * in a corpus-dedup graph the overwhelming majority of documents are in
@@ -517,8 +424,6 @@ object Dedup {
     // deleted as soon as the new round materializes (sym stays on the base
     // strategy — it is live for every round).
     val roll = graft.runtime.Reroot.rolling(reroot)
-    val debug = sys.props.get("graft.cc.debug").contains("true")
-    var t0 = System.nanoTime()
     // Init FUSES the first propagation round (r14): label₀(v) = min(v,
     // min neighbors) comes out of the same single groupBy-over-src shuffle
     // the old identity init (distinct src) paid — so the loop starts one
@@ -529,11 +434,9 @@ object Dedup {
     var labels = roll(sym.groupBy(col("src"))
       .agg(least(col("src"), min(col("dst"))).as("label"))
       .select(col("src").as("_id"), col("label")))
-    if (debug) println(f"[cc] init ${(System.nanoTime() - t0) / 1e9}%6.2f s")
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      t0 = System.nanoTime()
       // One round = min(own label, neighbors' labels) per vertex, computed
       // as ONE aggregation over the union of self rows and neighbor
       // contributions (r14) — a join + partial-aggregatable groupBy (2
@@ -550,10 +453,7 @@ object Dedup {
         .agg(min(col("label")).as("label"),
           min(when(col("_self"), col("label"))).as("_old"))
         .select(col("src").as("_id"), col("label"), col("_old")))
-      val t1 = System.nanoTime()
       converged = next.filter(col("label") =!= col("_old")).limit(1).isEmpty
-      if (debug) println(f"[cc] round $i step ${(t1 - t0) / 1e9}%6.2f s " +
-        f"probe ${(System.nanoTime() - t1) / 1e9}%6.2f s")
       labels = next.select(col("_id"), col("label"))
       i += 1
     }
@@ -577,95 +477,6 @@ object Dedup {
     // labels instead of re-aggregating `sym` (r14: one less distinct).
     val isolated = vertices.select(col("_id"))
       .join(labels.select(col("_id")), Seq("_id"), "left_anti")
-      .select(col("_id"), col("_id").as("label"))
-    labels.union(isolated)
-  }
-
-  /** Large-star/small-star connected components (Kiveris, Lattanzi,
-    * Mirrokni, Rastogi, Vassilvitskii — "Connected Components in MapReduce
-    * and Beyond", SoCC 2014): same signature and output contract as
-    * [[connectedComponents]], but converging in O(log n) ROUNDS instead of
-    * O(component diameter) — the variant for graphs whose components can
-    * be LONG CHAINS (the span-chain topology Lee et al. ACL '22 document
-    * in crawl near-dup data), where hash-min propagation at 100× scale
-    * would exceed any fixed round bound (VERDICT r12 task 4).
-    *
-    * Each round rewrites the edge set:
-    *  - large-star: every node u connects its STRICTLY LARGER neighbors
-    *    to m(u) = min(Γ(u) ∪ {u});
-    *  - small-star: every edge directed large→small; each node u connects
-    *    its (all smaller) neighbors and itself to m(u) = min(Γ(u)).
-    * Both operations preserve connectivity (each replaced edge (u,v)
-    * stays connected through m(u)); fixed points are exactly star forests
-    * rooted at component minima, so the converged edge set IS the label
-    * map. Rounds shrink the graph geometrically — the property hash-min
-    * lacks, where a diameter-d chain needs d rounds.
-    *
-    * Per round: two partial-aggregatable groupBys (the per-node min) and
-    * two joins back — the same shuffle shape as one hash-min round, so
-    * the shallow near-dup default stays on [[connectedComponents]] (its
-    * rounds are marginally cheaper and 2-3 suffice); this variant is the
-    * escape hatch that keeps deep components from hitting the loud
-    * maxIter throw. Convergence probe: a count compare per round, with an
-    * exact exceptAll check only when counts match.
-    */
-  def connectedComponentsStar(vertices: DataFrame, edges: DataFrame,
-                              maxIter: Int = 50,
-                              reroot: graft.runtime.Reroot = graft.runtime.Reroot.Local): DataFrame = {
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.select(explode(array(
-          struct(col("a").as("src"), col("b").as("dst")),
-          struct(col("b").as("src"), col("a").as("dst")))).as("_e"))
-        .select(col("_e.src").as("src"), col("_e.dst").as("dst"))
-      val mins = sym.groupBy(col("src")).agg(min(col("dst")).as("_mn"))
-      sym.join(mins, "src")
-        .filter(col("dst") > col("src"))
-        .select(col("dst").as("a"), least(col("src"), col("_mn")).as("b"))
-        .filter(col("a") =!= col("b")).distinct()
-    }
-    def smallStar(e: DataFrame): DataFrame = {
-      val dir = e.select(greatest(col("a"), col("b")).as("src"),
-          least(col("a"), col("b")).as("dst"))
-        .filter(col("src") =!= col("dst"))
-      val mins = dir.groupBy(col("src")).agg(min(col("dst")).as("_mn"))
-      dir.join(mins, "src")
-        .filter(col("dst") =!= col("_mn"))
-        .select(col("dst").as("a"), col("_mn").as("b"))
-        .union(mins.select(col("src").as("a"), col("_mn").as("b")))
-        .distinct()
-    }
-    val roll = graft.runtime.Reroot.rolling(reroot)
-    var cur = roll(edges.select(col("a"), col("b"))
-      .filter(col("a") =!= col("b")).distinct())
-    // Edge-incident vertices, captured from the INPUT edge set — the
-    // iteration rewrites edges, and isolated vertices (the overwhelming
-    // majority in a corpus dedup graph) never enter it, exactly as in
-    // [[connectedComponents]].
-    val incident = graft.runtime.Stage.scopedPersist(
-      cur.select(explode(array(col("a"), col("b"))).as("_id")).distinct())
-    var curCount = cur.count()
-    var converged = curCount == 0L
-    var i = 0
-    while (!converged && i < maxIter) {
-      val next = roll(smallStar(largeStar(cur)))
-      val nextCount = next.count()
-      converged = nextCount == curCount &&
-        next.exceptAll(cur).limit(1).isEmpty
-      cur = next
-      curCount = nextCount
-      i += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponentsStar did not converge within $maxIter rounds")
-    // The fixed point is a star forest (v → component min): labels are the
-    // edges themselves plus each root labelling itself.
-    val labels = cur.select(col("a").as("_id"), col("b").as("label"))
-      .union(cur.select(col("b").as("_id"), col("b").as("label")))
-      .distinct()
-    graft.runtime.Stage.scopedPersist(labels)
-    val isolated = vertices.select(col("_id"))
-      .join(incident, Seq("_id"), "left_anti")
       .select(col("_id"), col("_id").as("label"))
     labels.union(isolated)
   }

@@ -37,10 +37,9 @@ object ExtQueries {
   private val PLANES = 8
   private val DIM = 64
 
-  /** Minhash signatures / distinct shingle rows as shared stages (one
-    * materialization per session+dataset — the dedup analogue of the
-    * reference's staged keyword files): q25+q26 share the signatures,
-    * q26+q27 share the shingle table.
+  /** Minhash signatures as a shared stage (one materialization per
+    * session+dataset — the dedup analogue of the reference's staged keyword
+    * files): q25, q26 and every candidate pass share the signatures.
     */
   private def sharedSigs(s: SparkSession, d: String): DataFrame =
     graft.runtime.Stage.shared(s, s"minhash-sigs:$SH:$NH:$d") {
@@ -49,18 +48,12 @@ object ExtQueries {
           "doc_id", col("text"), SH, NH))
     }
 
-  private def sharedShingles(s: SparkSession, d: String): DataFrame =
-    graft.runtime.Stage.shared(s, s"shingle-rows:$SH:$d") {
-      graft.runtime.Stage.persistShared(
-        Dedup.shingleRows(graft.ops.Ops.fanOut(Tables.documents(s, d)),
-          "doc_id", col("text"), SH))
-    }
-
   /** Per-doc distinct shingle ARRAYS (r13): the narrow scoring input every
     * exact-jaccard pass joins twice by doc id — see Dedup.jaccardOnArrays
-    * for why this beats rescoring through the exploded-row table (the
-    * exploded form stays for consumers that genuinely need shingle-keyed
-    * rows: q269's truth-pair co-occurrence join, q253's span join).
+    * for why this beats rescoring through an exploded-row table. The one
+    * consumer that needs shingle-keyed rows (q269's truth-pair
+    * co-occurrence join) explodes these arrays, so the session caches one
+    * shingle form, not two.
     */
   private def sharedShingleArrays(s: SparkSession, d: String): DataFrame =
     graft.runtime.Stage.shared(s, s"shingle-arrays:$SH:$d") {
@@ -210,7 +203,7 @@ object ExtQueries {
     val bands = Dedup.bandRows(sharedSigs(s, d), "doc_id", NH, BAND)
     val withHub = graft.runtime.Stage.scopedPersist(
       Dedup.starJoined(bands, Dedup.starHubs(bands, "doc_id")))
-    val edges = starRescueEdgesOnJoined(starScoredPairs(s, d), withHub,
+    val edges = starRescueEdges(starScoredPairs(s, d), withHub,
         sharedShingleArrays(s, d))
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
     val verts = Tables.documents(s, d).select(col("doc_id").as("_id"))
@@ -220,37 +213,28 @@ object ExtQueries {
         (col("_id") === col("label")).as("is_canonical"))
   }
 
-  /** Star(h=1) ∪ rescue-wave thresholded edges over an arbitrary signature
-    * set — the reusable core of q286 and the q288 incremental posture.
-    * `scored` must be the exact-jaccard-scored star candidates of `sigs`
+  /** Star(h=1) ∪ rescue-wave thresholded edges over a prebuilt (typically
+    * scoped-persisted) hub-joined band table ([[Dedup.starJoined]]) — the
+    * reusable core of q286 and the q288 incremental posture. `scored` must
+    * be the exact-jaccard-scored star candidates of the same bands
     * (persisted by the caller; it feeds both the failure set and the
     * surviving edges). By the exactness theorem on
     * [[Dedup.lshStarRescueCandidates]], CC over the returned (doc_a,
     * doc_b) edges equals CC over the pair-complete thresholded LSH
-    * candidates of `sigs` — for WHATEVER sub-corpus `sigs` covers, since
+    * candidates of those bands — for WHATEVER sub-corpus they cover, since
     * signatures and band keys are per-document (corpus-independent).
+    * Sharing `withHub` across the star, rescue-incidence and rescue-pair
+    * passes (r14) avoids re-exploding, re-aggregating and re-joining the
+    * signatures per pass.
     *
-    * The size prefilter is output-invariant (it provably drops only
-    * sub-τ pairs — Dedup.jaccardSizePrefilter) but skips the pairs ×
-    * shingles intersection explode for them; the oracle chains and
-    * check_q286/check_q288 deliberately OMIT it, so the gate
-    * cross-validates its exactness every run.
+    * The rescue scoring's size prefilter is output-invariant (it provably
+    * drops only sub-τ pairs — Dedup.tauSizePredicate) but skips the
+    * intersection for them; the oracle chains and check_q286/check_q288
+    * deliberately OMIT it, so the gate cross-validates its exactness every
+    * run.
     */
-  private def starRescueEdgesFrom(scored: DataFrame, sigs: DataFrame,
-                                  arrs: DataFrame): DataFrame = {
-    val bands = Dedup.bandRows(sigs, "doc_id", NH, BAND)
-    starRescueEdgesOnJoined(scored,
-      Dedup.starJoined(bands, Dedup.starHubs(bands, "doc_id")), arrs)
-  }
-
-  /** [[starRescueEdgesFrom]] over a prebuilt (typically scoped-persisted)
-    * hub-joined band table ([[Dedup.starJoined]]) — result-identical; the
-    * r14 form that lets q286/q288 share one materialization across the
-    * star, rescue-incidence and rescue-pair passes instead of re-exploding,
-    * re-aggregating and re-joining the signatures per pass.
-    */
-  private def starRescueEdgesOnJoined(scored: DataFrame, withHub: DataFrame,
-                                      arrs: DataFrame): DataFrame = {
+  private def starRescueEdges(scored: DataFrame, withHub: DataFrame,
+                              arrs: DataFrame): DataFrame = {
     val failed = scored.filter(col("jaccard") < 0.5)
       .select(col("doc_a"), col("doc_b"))
     // r13: rescue scoring through the array form — the size prefilter is
@@ -258,7 +242,7 @@ object ExtQueries {
     // folded into the scoring join as a per-row filter instead of two
     // extra size-table joins (Dedup.jaccardOnArrays `tau`).
     val rescueScored = Dedup.jaccardOnArrays(
-      Dedup.lshStarRescueCandidatesOnJoined(withHub, "doc_id", failed),
+      Dedup.lshStarRescueCandidates(withHub, "doc_id", failed),
       arrs, tau = Some((1, 2)))
     scored.filter(col("jaccard") >= 0.5)
       .select(col("doc_a"), col("doc_b"))
@@ -296,7 +280,7 @@ object ExtQueries {
     * re-shingles or re-scores the base corpus; the base-side work is two
     * hash joins against stored state (bands, labels) — at 100 TB both
     * are bucketed tables and the probe cost scales with |batch|·bands,
-    * not |base| (tools.IncrementalProbe prices this on the nd tiers).
+    * not |base|.
     * The base state (labels) is computed here from base docs because the
     * harness is single-shot; a production deployment loads it.
     */
@@ -326,8 +310,8 @@ object ExtQueries {
       val withHub = Stage.scopedPersist(Dedup.starJoined(partBands,
         Dedup.starHubs(partBands, "doc_id")))
       val scored = Stage.scopedPersist(Dedup.jaccardOnArrays(
-        Dedup.lshStarCandidatesOnJoined(withHub, "doc_id"), arrs))
-      starRescueEdgesOnJoined(scored, withHub, arrs)
+        Dedup.lshStarCandidates(withHub, "doc_id"), arrs))
+      starRescueEdges(scored, withHub, arrs)
     }
 
     // Batch-internal edges (star+rescue within the batch) and cross
@@ -338,7 +322,7 @@ object ExtQueries {
     val incEdges = partEdges(incBands)
     val cross = Stage.scopedPersist(
       Dedup.jaccardOnArrays(
-        Dedup.lshCandidatesAgainstOn(broadcast(incBands), baseBands, "doc_id"),
+        Dedup.lshCandidatesAgainst(broadcast(incBands), baseBands, "doc_id"),
         arrs, tau = Some((1, 2)))
       .filter(col("jaccard") >= 0.5)
       .select(col("doc_a"), col("doc_b")))
@@ -353,17 +337,12 @@ object ExtQueries {
     // each other (base CC phase 4.4 s serial → 21-30 s under overlap; solo
     // lane 8.7 → 16.2 s median). The serial order below is the measured-best
     // shape.
-    val dbg = sys.props.get("graft.incr.debug").contains("true")
-    def tlog(name: String, t0: Long): Unit =
-      if (dbg) println(f"[incr] $name%-28s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-    val tCC = System.nanoTime()
     val baseVerts = docs.filter(col("doc_id") % 10 =!= 9)
       .select(col("doc_id").as("_id"))
     val baseLabels = Stage.scopedPersist(
       Dedup.connectedComponents(baseVerts,
         partEdges(baseBands).select(col("doc_a").as("a"), col("doc_b").as("b")),
         reroot = reroot))
-    tlog("base edges + CC", tCC)
 
     // Touched base clusters: those with a cross-edge member. Only their
     // members enter the merge CC (as label→member star edges); every
@@ -382,9 +361,7 @@ object ExtQueries {
     val edges = incEdges.union(cross)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
       .union(labelStars)
-    val tMerge = System.nanoTime()
     val merged = Dedup.connectedComponents(verts, edges, reroot = reroot)
-    tlog("merge edges + CC", tMerge)
     val untouched = baseLabels.join(touched,
       baseLabels("label") === touched("_tc"), "left_anti")
     merged.union(untouched)
@@ -494,7 +471,9 @@ object ExtQueries {
       val sigs = sharedSigs(s, d)
       val inc = sigs.filter(col("doc_id") % 10 === 9)
       val base = sigs.filter(col("doc_id") % 10 =!= 9)
-      val cands = Dedup.lshCandidatesAgainst(inc, base, "doc_id", NH, BAND)
+      val cands = Dedup.lshCandidatesAgainst(
+        Dedup.bandRows(inc, "doc_id", NH, BAND),
+        Dedup.bandRows(base, "doc_id", NH, BAND), "doc_id")
       val best = Dedup.jaccardOnArrays(cands, sharedShingleArrays(s, d))
         .groupBy(col("doc_a").as("doc_id"))
         .agg(count(lit(1)).as("n_cands"), max(col("jaccard")).as("best_jaccard"))
@@ -569,9 +548,9 @@ object ExtQueries {
       val sample = graft.runtime.Stage.scopedPersist(
         docs0.crossJoin(broadcast(thr))
           .filter(draw < col("_thr_ppb")).select(col("doc_id")))
-      val shs = sharedShingles(s, d)
+      val shs = sharedShingleArrays(s, d)
         .join(sample.select(col("doc_id").as("_id")), "_id")
-        .select(col("_id"), col("_s")).distinct()
+        .select(col("_id"), explode(col("_sa")).as("_s")).distinct()
       val tp = shs.select(col("_s"), col("_id").as("doc_a"))
         .join(shs.select(col("_s"), col("_id").as("doc_b")), "_s")
         .filter(col("doc_a") < col("doc_b"))

@@ -260,7 +260,7 @@ object ScaleQueries {
     // 50) — the prefix-filter idea of the PPJoin family: hot items
     // generate quadratic candidate blow-up and discriminate nothing, so
     // candidate generation joins only through the rare tail; exact Jaccard
-    // then runs on the FULL sets via ext.Dedup.jaccardOnShingles — the
+    // then runs on the FULL sets via ext.Dedup.jaccardOnArrays — the
     // same operator that scores document shingles, reused unchanged on
     // behavioral sets.
     "q119_user_set_sim" -> ((s, d) => {

@@ -1,0 +1,44 @@
+package graft
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
+
+/** Pins the bench harness's failure rule: a lane that throws is a failure,
+  * never a (fast) sample, and the summary line still fits its budget.
+  */
+class BenchSpec extends AnyFunSuite {
+
+  test("sampleLane: a throwing lane yields its error and no samples") {
+    var calls = 0
+    val boom = new IllegalStateException("boom")
+    val failing = Bench.sampleLane(3) { () => calls += 1; throw boom }
+    assert(failing === Left(boom))
+    assert(calls === 1) // the first failure ends the lane
+    // a lane that throws on a later sample drops the samples before it
+    var n = 0
+    val late = Bench.sampleLane(3) { () => n += 1; if (n == 2) throw boom }
+    assert(late.isLeft)
+    val ok = Bench.sampleLane(3)(() => ())
+    assert(ok.map(_.size) === Right(3))
+    assert(ok.forall(_.forall(_ >= 0.0)))
+  }
+
+  test("summaryLine: failed lanes listed, one JSON line within the budget") {
+    val medians = (1 to 300).map(i => f"q$i%03d_some_lane_name" -> i / 100.0)
+    val failed = Seq("q900_broken", "q901_broken")
+    val total = medians.map(_._2).sum
+    val line = Bench.summaryLine(total, 3, "sf0.1", "bench/full_sf0.1.json",
+      medians, failed)
+    assert(line.length <= 1800)
+    assert(!line.contains('\n'))
+    val json = new ObjectMapper().readTree(line)
+    assert(json.get("failed").elements().asScala.map(_.asText()).toSeq === failed)
+    assert(json.get("failed_total").asInt() === 2)
+    assert(json.get("queries_total").asInt() === 300)
+    val shown = json.get("queries").fieldNames().asScala.toSeq
+    assert(shown.nonEmpty && shown.size === json.get("queries_shown").asInt())
+    assert(shown.head === "q300_some_lane_name") // slowest first
+    assert(!shown.exists(failed.contains))
+  }
+}

@@ -62,8 +62,9 @@ class EdgeCaseSpec extends AnyFunSuite {
     val sigs = Dedup.minhashSignatures(docs, "doc_id", col("text"), 3, 8).collect()
     assert(sigs.length === 2)
     sigs.foreach(r => assert(r.isNullAt(1))) // no shingles -> null sig
-    val j = Dedup.jaccard(Seq((1L, 2L)).toDF("doc_a", "doc_b"), docs, "doc_id", col("text"), 3)
-    // both shingle sets empty -> pair drops out of the size join (no rows)
+    val j = Dedup.jaccardOnArrays(Seq((1L, 2L)).toDF("doc_a", "doc_b"),
+      Dedup.shingleArrays(docs, "doc_id", col("text"), 3))
+    // both shingle sets empty -> the pair is dropped (no rows)
     assert(j.count() === 0)
   }
 

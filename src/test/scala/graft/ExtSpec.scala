@@ -45,7 +45,8 @@ class ExtSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cands.contains((1L, 2L)))
     assert(!cands.contains((1L, 3L)))
-    val j = Dedup.jaccard(Seq((1L, 2L)).toDF("doc_a", "doc_b"), docs, "doc_id", col("text"), 3)
+    val j = Dedup.jaccardOnArrays(Seq((1L, 2L)).toDF("doc_a", "doc_b"),
+        Dedup.shingleArrays(docs, "doc_id", col("text"), 3))
       .collect().head.getDouble(2)
     assert(j === 1.0)
   }
@@ -58,13 +59,20 @@ class ExtSpec extends AnyFunSuite {
       (3L, "completely unrelated content words entirely elsewhere")) // base
       .toDF("doc_id", "text")
     val sigs = Dedup.minhashSignatures(docs, "doc_id", col("text"), 3, 8)
-    val inc = sigs.filter($"doc_id" % 10 === 9)
-    val base = sigs.filter($"doc_id" % 10 =!= 9)
-    val cands = Dedup.lshCandidatesAgainst(inc, base, "doc_id", 8, 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def pairSet(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // q263 shape: band each side's signatures
+    val cands = pairSet(Dedup.lshCandidatesAgainst(
+      Dedup.bandRows(sigs.filter($"doc_id" % 10 === 9), "doc_id", 8, 2),
+      Dedup.bandRows(sigs.filter($"doc_id" % 10 =!= 9), "doc_id", 8, 2), "doc_id"))
     // both incoming dups hit base doc 1 (19 > 1 also emits — no `<` cut);
     // the 9↔19 intra-batch pair and any base↔base pair never appear
     assert(cands === Set((9L, 1L), (19L, 1L)))
+    // q288 shape: one band table split by filter, incoming side broadcast
+    val bands = Dedup.bandRows(sigs, "doc_id", 8, 2)
+    assert(pairSet(Dedup.lshCandidatesAgainst(
+      broadcast(bands.filter($"doc_id" % 10 === 9)),
+      bands.filter($"doc_id" % 10 =!= 9), "doc_id")) === cands)
   }
 
   test("star candidates: m-member bucket emits m-1 hub edges, never C(m,2)") {
@@ -92,11 +100,15 @@ class ExtSpec extends AnyFunSuite {
     ).toDF("doc_id", "text")
     val pairs = Seq((1L, 2L), (1L, 3L), (1L, 5L), (4L, 5L), (1L, 6L), (6L, 4L))
       .toDF("doc_a", "doc_b")
-    val sh = Dedup.shingleRows(docs, "doc_id", col("text"), 3)
+    val sh = DedupReference.shingleRows(docs, "doc_id", col("text"), 3)
     val arrs = Dedup.shingleArrays(docs, "doc_id", col("text"), 3)
+    // exploding the arrays yields exactly the reference shingle rows (the
+    // q269 truth-pair rows are derived this way)
+    assert(arrs.select(col("_id"), explode(col("_sa")).as("_s")).collect().toSet
+      === sh.collect().toSet)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val exploded = rows(Dedup.jaccardOnShingles(pairs, sh))
+    val exploded = rows(DedupReference.jaccardOnShingles(pairs, sh))
     val arrayed = rows(Dedup.jaccardOnArrays(pairs, arrs))
     assert(arrayed === exploded)
     // pairs touching the unshingleable doc 6 are dropped by BOTH forms
@@ -104,8 +116,8 @@ class ExtSpec extends AnyFunSuite {
     // zero-intersection pair scores 0.0 (kept), not dropped
     assert(exploded.contains((1L, 5L, 0.0)))
     // tau-folded prefilter == explicit jaccardSizePrefilter + scoring
-    val pre = rows(Dedup.jaccardOnShingles(
-      Dedup.jaccardSizePrefilter(pairs, sh, 1, 2), sh))
+    val pre = rows(DedupReference.jaccardOnShingles(
+      DedupReference.jaccardSizePrefilter(pairs, sh, 1, 2), sh))
     val folded = rows(Dedup.jaccardOnArrays(pairs, arrs, tau = Some((1, 2))))
     assert(folded === pre)
   }
@@ -132,7 +144,7 @@ class ExtSpec extends AnyFunSuite {
     val sh = Seq((1L, "a"), (1L, "b"), (2L, "a"), (2L, "b"), (2L, "c"),
       (2L, "d"), (3L, "c"), (3L, "d")).toDF("_id", "_s")
     def clusters(cands: Set[(Long, Long)]): Map[Long, Long] = {
-      val edges = Dedup.jaccardOnShingles(
+      val edges = DedupReference.jaccardOnShingles(
           cands.toSeq.toDF("doc_a", "doc_b"), sh)
         .filter(col("jaccard") >= 0.5)
         .select(col("doc_a").as("a"), col("doc_b").as("b"))
@@ -167,27 +179,29 @@ class ExtSpec extends AnyFunSuite {
       .toDF("doc_id", "sig0", "sig1", "sig2", "sig3", "sig4", "sig5", "sig6", "sig7")
     val sh = Seq((1L, "a"), (1L, "b"), (2L, "a"), (2L, "b"), (2L, "c"),
       (2L, "d"), (3L, "c"), (3L, "d")).toDF("_id", "_s")
-    val starScored = Dedup.jaccardOnShingles(
-      Dedup.lshStarCandidates(sigs, "doc_id", 8, 2), sh)
+    val bands = Dedup.bandRows(sigs, "doc_id", 8, 2)
+    val withHub = Dedup.starJoined(bands, Dedup.starHubs(bands, "doc_id"))
+    val starScored = DedupReference.jaccardOnShingles(
+      Dedup.lshStarCandidates(withHub, "doc_id"), sh)
     val failed = starScored.filter(col("jaccard") < 0.5)
       .select(col("doc_a"), col("doc_b"))
     assert(failed.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       === Set((1L, 3L)))
-    val rescue = Dedup.lshStarRescueCandidates(sigs, "doc_id", 8, 2, failed)
+    val rescue = Dedup.lshStarRescueCandidates(withHub, "doc_id", failed)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // only the member-member pair — hub-incident pairs are never re-scored
     assert(rescue === Set((2L, 3L)))
     // the size prefilter keeps it (|2|=4, |3|=2 shingles: 2·2 ≥ 4)
-    assert(Dedup.jaccardSizePrefilter(rescue.toSeq.toDF("doc_a", "doc_b"), sh, 1, 2)
+    assert(DedupReference.jaccardSizePrefilter(rescue.toSeq.toDF("doc_a", "doc_b"), sh, 1, 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet === Set((2L, 3L)))
     // ...and provably drops only sub-τ pairs: a 1-vs-4-shingle pair
     // (max possible jaccard 1/4 < τ) is filtered
     val shBig = sh.union(Seq((9L, "a")).toDF("_id", "_s"))
-    assert(Dedup.jaccardSizePrefilter(Seq((2L, 9L)).toDF("doc_a", "doc_b"), shBig, 1, 2)
+    assert(DedupReference.jaccardSizePrefilter(Seq((2L, 9L)).toDF("doc_a", "doc_b"), shBig, 1, 2)
       .count() === 0L)
     val edges = starScored.filter(col("jaccard") >= 0.5)
       .select(col("doc_a"), col("doc_b"))
-      .union(Dedup.jaccardOnShingles(Seq((2L, 3L)).toDF("doc_a", "doc_b"), sh)
+      .union(DedupReference.jaccardOnShingles(Seq((2L, 3L)).toDF("doc_a", "doc_b"), sh)
         .filter(col("jaccard") >= 0.5).select(col("doc_a"), col("doc_b")))
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
     val lab = Dedup.connectedComponents((1L to 3L).toDF("_id"), edges)
@@ -195,43 +209,30 @@ class ExtSpec extends AnyFunSuite {
     // identical to the pair-complete clustering, not merely a refinement
     assert(lab === Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
     // no failures -> empty rescue wave (the τ-homogeneous-bucket case)
-    val none = Dedup.lshStarRescueCandidates(sigs, "doc_id", 8, 2,
+    val none = Dedup.lshStarRescueCandidates(withHub, "doc_id",
       spark.emptyDataset[(Long, Long)].toDF("doc_a", "doc_b"))
     assert(none.count() === 0L)
   }
 
   test("band-level variants (r14): prebuilt bands/hubs are result-identical to the sigs forms") {
-    // The q288 posture shares ONE band/hub build across the star, rescue
-    // and cross-probe passes; each *On variant must reproduce its sigs-
-    // input twin exactly. Mixed fixture: an exact-dup bucket plus the
-    // split-case bucket from the rescue test, split into base/incoming.
+    // The q288 posture persists ONE hub-joined band build and runs star
+    // candidates over it; the sigs entry (q281/q285) must produce the same
+    // pairs. Mixed fixture: an exact-dup bucket plus an unrelated pair.
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "the quick brown fox jumps over the lazy dog"),
-      (9L, "the quick brown fox jumps over the lazy dog"),   // incoming
-      (19L, "completely unrelated content words entirely elsewhere"), // incoming
+      (9L, "the quick brown fox jumps over the lazy dog"),
+      (19L, "completely unrelated content words entirely elsewhere"),
       (4L, "completely unrelated content words entirely elsewhere"))
       .toDF("doc_id", "text")
     val sigs = Dedup.minhashSignatures(docs, "doc_id", col("text"), 3, 8)
     val bands = Dedup.bandRows(sigs, "doc_id", 8, 2)
-    val hubs = Dedup.starHubs(bands, "doc_id")
     def pairSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // star
-    assert(pairSet(Dedup.lshStarCandidatesOn(bands, hubs, "doc_id"))
-      === pairSet(Dedup.lshStarCandidates(sigs, "doc_id", 8, 2)))
-    // rescue (synthetic failed edge so the wave is non-empty)
-    val failed = Seq((1L, 9L)).toDF("doc_a", "doc_b")
-    assert(pairSet(Dedup.lshStarRescueCandidatesOn(bands, hubs, "doc_id", failed))
-      === pairSet(Dedup.lshStarRescueCandidates(sigs, "doc_id", 8, 2, failed)))
-    // cross probe: filter-split band table (+ broadcast hint on the
-    // incoming side, the q288 shape) equals banding the filtered sigs
-    val incB = bands.filter($"doc_id" % 10 === 9)
-    val baseB = bands.filter($"doc_id" % 10 =!= 9)
-    assert(pairSet(Dedup.lshCandidatesAgainstOn(broadcast(incB), baseB, "doc_id"))
-      === pairSet(Dedup.lshCandidatesAgainst(
-        sigs.filter($"doc_id" % 10 === 9),
-        sigs.filter($"doc_id" % 10 =!= 9), "doc_id", 8, 2)))
+    val joined = pairSet(Dedup.lshStarCandidates(
+      Dedup.starJoined(bands, Dedup.starHubs(bands, "doc_id")), "doc_id"))
+    assert(joined === pairSet(Dedup.lshStarCandidates(sigs, "doc_id", 8, 2)))
+    assert(joined === Set((1L, 2L), (1L, 9L), (4L, 19L)))
   }
 
   test("q288: incremental merge equals union exact dedup (delta-posture theorem)") {
@@ -276,7 +277,8 @@ class ExtSpec extends AnyFunSuite {
     val docs = Seq(
       (1L, "a b c d"),
       (2L, "x y z w")).toDF("doc_id", "text")
-    val j = Dedup.jaccard(Seq((1L, 2L)).toDF("doc_a", "doc_b"), docs, "doc_id", col("text"), 3)
+    val j = Dedup.jaccardOnArrays(Seq((1L, 2L)).toDF("doc_a", "doc_b"),
+        Dedup.shingleArrays(docs, "doc_id", col("text"), 3))
       .collect().head.getDouble(2)
     assert(j === 0.0)
   }

@@ -137,43 +137,6 @@ class GraphTrendSpec extends AnyFunSuite {
     assert(tri(Seq.empty[(Long, Long)]) === 0L)
   }
 
-  test("large-star/small-star CC: converges on a chain where hash-min hits its round bound") {
-    graft.runtime.Stage.newQueryScope()
-    // A 60-vertex path: component diameter 59. Hash-min label propagation
-    // needs diameter rounds, so maxIter=25 must FAIL LOUDLY — exactly the
-    // crawl span-chain failure mode VERDICT r12 task 4 names — while the
-    // alternating large-star/small-star algorithm shrinks the chain
-    // geometrically and converges well inside its default bound.
-    val n = 60L
-    val verts = (0L until n).toDF("_id")
-    val chain = (0L until n - 1).map(i => (i, i + 1)).toDF("a", "b")
-    val thrown = intercept[IllegalStateException] {
-      Dedup.connectedComponents(verts, chain, maxIter = 25).collect()
-    }
-    assert(thrown.getMessage.contains("did not converge"))
-    graft.runtime.Stage.newQueryScope()
-    val starLab = Dedup.connectedComponentsStar(verts, chain)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(starLab === (0L until n).map(_ -> 0L).toMap)
-    // same output contract as hash-min on a shallow graph (+ isolated 9)
-    graft.runtime.Stage.newQueryScope()
-    val verts2 = Seq(1L, 2L, 3L, 4L, 5L, 9L).toDF("_id")
-    val edges2 = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("a", "b")
-    val lab2 = Dedup.connectedComponentsStar(verts2, edges2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    graft.runtime.Stage.newQueryScope()
-    val hashMin2 = Dedup.connectedComponents(verts2, edges2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(lab2 === hashMin2)
-    assert(lab2 === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 9L -> 9L))
-    // empty edge set: all vertices label themselves, no iteration
-    graft.runtime.Stage.newQueryScope()
-    val lab3 = Dedup.connectedComponentsStar(verts2,
-        Seq.empty[(Long, Long)].toDF("a", "b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(lab3 === Seq(1L, 2L, 3L, 4L, 5L, 9L).map(v => v -> v).toMap)
-  }
-
   test("pageRank: empty edge set yields an empty rank table, no failure") {
     graft.runtime.Stage.newQueryScope()
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
