@@ -51,8 +51,7 @@ object Scratch {
   def dir(lane: String, datasetDir: String): String = {
     Heartbeat.ensureKeyed(hbFile)(touchHeartbeat())
     if (swept.compareAndSet(false, true)) sweepStale()
-    val tag = Integer.toHexString(datasetDir.hashCode).replace('-', '_')
-    val p = s"$root/graft_${lane}_${jvmTag}_$tag"
+    val p = s"$root/graft_${lane}_${jvmTag}_${graft.streaming.Replay.tag(datasetDir)}"
     created.add(p)
     p
   }

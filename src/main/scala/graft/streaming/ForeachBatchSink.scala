@@ -22,33 +22,17 @@ object ForeachBatchSink {
     df.write.mode("overwrite").parquet(s"$out/batch=$batchId")
 
   /** End-to-end run of the sink: stream the purchase events through
-    * foreachBatch into a per-batch-overwrite parquet tree under /tmp, then
-    * read the tree back as the ledger. One ingestion per (session, dataset)
-    * via the stage registry; the output tree is cleared first so a rerun
-    * re-lands every batch instead of double-counting a previous run's.
+    * [[Replay.drainParquet]] into a per-batch-overwrite parquet tree under
+    * the scratch dir, then read the tree back as the ledger. One ingestion
+    * per (session, dataset) via the stage registry.
     */
   def sharedPurchaseLedger(spark: SparkSession, dir: String): DataFrame =
     graft.runtime.Stage.shared(spark, s"foreachbatch-ledger:$dir") {
-      val out = graft.runtime.Scratch.dir("ledger", dir)
-      val p = new org.apache.hadoop.fs.Path(out)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-
-      val stream = StreamingHotTopics.eventsStream(spark, dir)
+      val purchases = StreamingHotTopics.eventsStream(spark, dir)
         .filter(col("event_type") === "purchase")
         .select(col("user_id"), col("value"))
-
-      val q = stream.writeStream
-        .outputMode("append")
-        .foreachBatch(idempotentParquet(s"$out/data") _)
-        .option("checkpointLocation", s"$out/_ckpt")
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-
-      // partition discovery exposes batch=<id>; drop it — the ledger is the
-      // union of every batch's (repaired) output.
-      graft.runtime.Stage.persistShared(
-        spark.read.parquet(s"$out/data").drop("batch"))
+      val ledger = Replay.drainParquet(purchases, graft.runtime.Scratch.dir("ledger", dir))
+        .getOrElse(sys.error(s"no events to replay under $dir"))
+      graft.runtime.Stage.persistShared(ledger)
     }
 }

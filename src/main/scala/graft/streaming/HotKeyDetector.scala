@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming-native hot-key detection feeding the salted stream-stream
@@ -71,31 +71,16 @@ object HotKeyDetector {
 
   /** Runs the detector stream to completion over a bounded events source
     * and returns the detected hot keys. `events` must be a STREAMING frame
-    * with `user_id` and `ts`. The ledger parquet tree and the query
-    * checkpoint live under `workDir`; reruns clear the tree first (the
-    * checkpoint is cleared with it — a rerun is a fresh epoch, not a
-    * resume).
+    * with `user_id` and `ts`. The ledger lands through
+    * [[Replay.drainParquet]] under `workDir`, which a rerun clears (a
+    * rerun is a fresh epoch, not a resume).
     */
-  def detectBounded(spark: SparkSession, events: DataFrame, workDir: String,
+  def detectBounded(events: DataFrame, workDir: String,
                     windowDur: String = "1 hour", delay: String = "2 hours",
-                    minShare: Double = 0.01, minCount: Long = 100L): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(workDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    val q = windowCounts(events, "user_id", "ts", windowDur, delay)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch(ForeachBatchSink.idempotentParquet(s"$workDir/ledger") _)
-      .option("checkpointLocation", s"$workDir/_ckpt")
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+                    minShare: Double = 0.01, minCount: Long = 100L): Seq[Long] =
     // An all-late or empty input emits no closed windows at all — no
-    // ledger directory, no hot keys (the join degenerates to unsalted).
-    val ledgerPath = new org.apache.hadoop.fs.Path(s"$workDir/ledger")
-    if (!fs.exists(ledgerPath)) Seq.empty
-    else hotKeys(spark.read.parquet(s"$workDir/ledger").drop("batch"),
-        minShare, minCount)
-      .collect().toSeq.map(_.getLong(0)).sorted
-  }
+    // ledger, no hot keys (the join degenerates to unsalted).
+    Replay.drainParquet(windowCounts(events, "user_id", "ts", windowDur, delay), workDir)
+      .fold(Seq.empty[Long])(hotKeys(_, minShare, minCount)
+        .collect().toSeq.map(_.getLong(0)).sorted)
 }

@@ -13,7 +13,9 @@ import org.apache.spark.sql.SparkSession
   *
   * [[withStatePartitions]] scopes the session's shuffle-partition conf to a
   * stream's start..drain window and restores it after, so batch plans in the
-  * same session are untouched. The default (min(8, defaultParallelism)) is a
+  * same session are untouched. The scope is applied in one place, the
+  * [[Replay]] drains every bounded runner goes through (plus the
+  * AvailableNow lane's own start..termination block). The default (min(8, defaultParallelism)) is a
   * local-replay setting; a production deployment sets
   * `spark.graft.streaming.statePartitions` to match its ingest rate — at
   * 100 TB/day that is hundreds of partitions, chosen so each store's state

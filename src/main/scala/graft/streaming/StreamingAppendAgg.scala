@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Append-mode windowed aggregation — the FINALIZED-window contract: a
@@ -12,54 +12,26 @@ import org.apache.spark.sql.functions._
   *
   * Bounded-input subtlety, same as StreamingOuterJoin: watermarks advance
   * only on data, so the last day's window would never finalize on a finite
-  * file. The runner unions one far-future SENTINEL click whose only job is
-  * to push the watermark past every real window; its own (far-future)
-  * window is dropped from the result.
+  * file. The runners read [[Replay.eventsWithSentinel]], whose far-future
+  * rows push the watermark past every real window; their own (far-future)
+  * windows fall after the dataset's last day and are dropped from the
+  * result.
   */
 object StreamingAppendAgg {
-
-  private val SENTINEL_USER = -1L
 
   /** Daily click counts, append-mode finalized. Returns (day, n_clicks,
     * sum_value).
     */
-  def dailyFinalizedClickCounts(spark: SparkSession, dir: String): DataFrame =
-      StreamConf.withStatePartitions(spark) {
-    val sentinelDir = graft.runtime.Scratch.dir("appendagg_sentinel", dir)
-    // Harness-only scalar: a single-row parallel max() sizing the bounded-
-    // input sentinel (and the maxRealDay output fence below) — not a data
-    // collect. A production unbounded stream has no sentinel and no such
-    // driver action; watermarks advance on live data.
-    val maxUs = graft.io.Tables.events(spark, dir)
-      .agg(max(unix_micros(col("ts")))).head().getLong(0)
-    val farNs = (maxUs + 36L * 3600L * 1000000L) * 1000L
-    spark.createDataFrame(Seq((-1L, farNs, SENTINEL_USER, "click", 0.0, "{}")))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.mode("overwrite").parquet(sentinelDir)
-
-    def src(path: String, glob: Option[String]): DataFrame =
-      StreamingHotTopics.eventsStream(spark, path, glob)
-    val clicks = src(dir, Some("events.parquet")).union(src(sentinelDir, None))
+  def dailyFinalizedClickCounts(spark: SparkSession, dir: String): DataFrame = {
+    val daily = Replay.eventsWithSentinel(spark, dir)
       .filter(col("event_type") === "click")
       .withWatermark("ts", "2 hours")
-
-    val sink = s"stream_append_agg_${Integer.toHexString(dir.hashCode).replace('-', '_')}"
-    val q = clicks
       .groupBy(window(col("ts"), "1 day"))
       .agg(count(lit(1)).as("n_clicks"), sum(col("value")).as("sv"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    val maxRealDay = to_date(timestamp_micros(lit(maxUs)))
-    spark.table(sink)
+    Replay.drain(daily, "append", "stream_append_agg", dir)
       .select(to_date(col("window.start")).as("day"), col("n_clicks"),
         round(col("sv"), 2).as("sum_value"))
-      .filter(col("day") <= maxRealDay)
+      .filter(col("day") <= lastDay(spark, dir))
   }
 
   /** Chained stateful operators (Spark's multiple-stateful-operator lane,
@@ -74,24 +46,9 @@ object StreamingAppendAgg {
     *
     * Returns (event_type, day, n_events, n_active_hours, max_hourly).
     */
-  def dailyHourlyProfile(spark: SparkSession, dir: String): DataFrame =
-      StreamConf.withStatePartitions(spark) {
-    val sentinelDir = graft.runtime.Scratch.dir("chainagg_sentinel", dir)
-    // Harness-only scalar (see dailyFinalizedClickCounts): single-row
-    // max() job for sentinel sizing + output fence; absent in production.
-    val maxUs = graft.io.Tables.events(spark, dir)
-      .agg(max(unix_micros(col("ts")))).head().getLong(0)
-    val farNs = (maxUs + 72L * 3600L * 1000000L) * 1000L
-    spark.createDataFrame(Seq((-1L, farNs, SENTINEL_USER, "click", 0.0, "{}")))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.mode("overwrite").parquet(sentinelDir)
-
-    def src(path: String, glob: Option[String]): DataFrame =
-      StreamingHotTopics.eventsStream(spark, path, glob)
-    val ev = src(dir, Some("events.parquet")).union(src(sentinelDir, None))
+  def dailyHourlyProfile(spark: SparkSession, dir: String): DataFrame = {
+    val hourly = Replay.eventsWithSentinel(spark, dir)
       .withWatermark("ts", "2 hours")
-
-    val hourly = ev
       .groupBy(col("event_type"), window(col("ts"), "1 hour"))
       .agg(count(lit(1)).as("n"))
     val daily = hourly
@@ -99,20 +56,15 @@ object StreamingAppendAgg {
       .agg(sum(col("n")).as("n_events"),
         count(lit(1)).as("n_active_hours"),
         max(col("n")).as("max_hourly"))
-
-    val sink = s"stream_chain_agg_${Integer.toHexString(dir.hashCode).replace('-', '_')}"
-    val q = daily.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    val maxRealDay = to_date(timestamp_micros(lit(maxUs)))
-    spark.table(sink)
+    Replay.drain(daily, "append", "stream_chain_agg", dir)
       .select(col("event_type"), to_date(col("window.start")).as("day"),
         col("n_events"), col("n_active_hours"), col("max_hourly"))
-      .filter(col("day") <= maxRealDay)
+      .filter(col("day") <= lastDay(spark, dir))
   }
+
+  /** The dataset's last real day: the fence past which only sentinel
+    * windows lie.
+    */
+  private def lastDay(spark: SparkSession, dir: String): Column =
+    to_date(timestamp_micros(lit(Replay.sentinel(spark, dir).maxUs)))
 }

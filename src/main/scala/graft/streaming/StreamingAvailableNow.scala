@@ -9,29 +9,30 @@ import org.apache.spark.sql.streaming.Trigger
   * checkpoint, and TERMINATE. This is how a 100 TB deployment runs
   * "streaming" logic on a nightly schedule: same exactly-once state
   * machine and sink contract as the always-on query, but with batch-job
-  * start/stop semantics (contrast processAllAvailable, which waits on an
-  * ever-running query — see the other streaming runners).
+  * start/stop semantics (contrast [[Replay]]'s drain, which the other
+  * streaming runners go through: it waits on an ever-running query).
+  * This lane therefore keeps its own start..termination block.
   */
 object StreamingAvailableNow {
 
   /** Daily click counts via an AvailableNow run (complete-mode memory
     * sink). Returns (day, n_clicks).
     */
-  def dailyClickCounts(spark: SparkSession, dir: String): DataFrame =
-      StreamConf.withStatePartitions(spark) {
-    val sink = s"avail_now_${Integer.toHexString(dir.hashCode).replace('-', '_')}"
-    val clicks = StreamingHotTopics.eventsStream(spark, dir)
+  def dailyClickCounts(spark: SparkSession, dir: String): DataFrame = {
+    val sink = s"avail_now_${Replay.tag(dir)}"
+    val counts = StreamingHotTopics.eventsStream(spark, dir)
       .filter(col("event_type") === "click")
-    val q = clicks
       .groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("n_clicks"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(sink)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination() // AvailableNow terminates on its own
+    StreamConf.withStatePartitions(spark) {
+      counts.writeStream
+        .outputMode("complete")
+        .format("memory")
+        .queryName(sink)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination() // AvailableNow terminates on its own
+    }
     spark.table(sink)
   }
 }

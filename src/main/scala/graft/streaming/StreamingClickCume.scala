@@ -22,24 +22,13 @@ object StreamingClickCume {
   /** Runs the stream to completion; returns (userId, day, n_clicks,
     * cum_clicks) — per-user per-day counts with running totals.
     */
-  def dailyCumulative(spark: SparkSession, dir: String,
-                      queryName: String = "stream_click_cume"): DataFrame =
-      StreamConf.withStatePartitions(spark) {
+  def dailyCumulative(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val stream = StreamingHotTopics.eventsStream(spark, dir)
       .filter(col("event_type") === "click")
       .select(col("user_id"), to_date(col("ts")).as("day"))
       .as[(Long, java.sql.Date)]
-
-    val q = cumulative(stream).writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    spark.table(queryName)
+    Replay.drain(cumulative(stream), "append", "stream_click_cume", dir)
   }
 
   /** The stateful transform itself, shared by the file-source runner and the

@@ -29,27 +29,15 @@ object StreamingDedup {
   /** Runs the dedup stream to completion; returns per-day
     * (day, n_exposures, n_users) over first-seen (user, news, day) rows.
     */
-  def dailyExposures(spark: SparkSession, dir: String,
-                     queryName: String = "stream_dedup"): DataFrame =
-      StreamConf.withStatePartitions(spark) {
-    val stream = StreamingHotTopics.eventsStream(spark, dir)
-
-    val exposures = stream
+  def dailyExposures(spark: SparkSession, dir: String): DataFrame = {
+    val exposures = StreamingHotTopics.eventsStream(spark, dir)
       .filter(col("event_type") === "click")
       .select(col("user_id"), (col("event_id") % 500).as("newsId"),
         to_date(col("ts")).as("day"), col("ts"))
       .withWatermark("ts", "1 day")
       .dropDuplicatesWithinWatermark("user_id", "newsId", "day")
 
-    val q = exposures.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    spark.table(queryName)
+    Replay.drain(exposures, "append", "stream_dedup", dir)
       .groupBy(col("day"))
       .agg(count(lit(1)).as("n_exposures"),
         countDistinct(col("user_id")).as("n_users"))

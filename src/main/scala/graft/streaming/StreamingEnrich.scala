@@ -20,38 +20,21 @@ object StreamingEnrich {
 
   /** Runs the enrichment stream to completion over the bounded events file
     * and returns one row per enriched event:
-    * (event_id, user_id, event_type, value, segment).
-    */
-  def enrichedEvents(spark: SparkSession, dir: String,
-                     dim: DataFrame, queryName: String): DataFrame = {
-    val stream = StreamingHotTopics.eventsStream(spark, dir)
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-
-    // Inner join against the static side: stateless per micro-batch, so the
-    // sink sees exactly the batch-join rows (append mode, no watermark).
-    val joined = stream.join(broadcast(dim), col("user_id") === col("c_custkey"))
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"),
-        col("c_mktsegment").as("segment"))
-
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
-  }
-
-  /** Shared stage: one streaming ingestion+enrichment run per
-    * (session, dataset); the memory-sink view name is derived from the
-    * dataset dir so two datasets in one session own distinct sink tables.
+    * (event_id, user_id, event_type, value, segment). Shared stage: one
+    * streaming ingestion+enrichment run per (session, dataset).
     */
   def sharedEnrichedEvents(spark: SparkSession, dir: String): DataFrame =
     graft.runtime.Stage.shared(spark, s"stream-enriched-events:$dir") {
-      val sink = s"stream_enrich_${Integer.toHexString(dir.hashCode).replace('-', '_')}"
       val dim = graft.io.Tables.customer(spark, dir)
         .select(col("c_custkey"), col("c_mktsegment"))
-      graft.runtime.Stage.persistShared(enrichedEvents(spark, dir, dim, sink))
+      // Inner join against the static side: stateless per micro-batch, so
+      // the sink sees exactly the batch-join rows (append mode, no
+      // watermark).
+      val joined = StreamingHotTopics.eventsStream(spark, dir)
+        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
+        .join(broadcast(dim), col("user_id") === col("c_custkey"))
+        .select(col("event_id"), col("user_id"), col("event_type"), col("value"),
+          col("c_mktsegment").as("segment"))
+      graft.runtime.Stage.persistShared(Replay.drain(joined, "append", "stream_enrich", dir))
     }
 }

@@ -108,14 +108,8 @@ object StreamingHotTopics {
     * and returns the result table: (day, newsId, clicks) — daily click
     * counts per news item, the input to the hot-topics ranking.
     */
-  def dailyClickCounts(spark: SparkSession, dir: String,
-                       queryName: String = "stream_hot"): DataFrame =
-      StreamConf.withStatePartitions(spark) {
-    // The file stream source needs a directory; select just the events file
-    // from the table directory via a glob filter.
-    val stream = eventsStream(spark, dir)
-
-    val clicks = stream
+  def dailyClickCounts(spark: SparkSession, dir: String): DataFrame = {
+    val clicks = eventsStream(spark, dir)
       .filter(col("event_type") === "click")
       .select((col("event_id") % 500).as("newsId"), col("ts"))
 
@@ -125,14 +119,7 @@ object StreamingHotTopics {
       .agg(count(lit(1)).as("clicks"))
       .select(to_date(col("window.start")).as("day"), col("newsId"), col("clicks"))
 
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    Replay.drain(agg, "complete", "stream_counts", dir)
   }
 
   /** The daily-count table as a shared stage: one streaming ingestion run
@@ -142,12 +129,6 @@ object StreamingHotTopics {
     */
   def sharedDailyClickCounts(spark: SparkSession, dir: String): DataFrame =
     graft.runtime.Stage.shared(spark, s"stream-daily-counts:$dir") {
-      // The memory-sink temp view must be unique per dataset dir: a fixed
-      // name would be re-registered by a second dataset in the same session,
-      // and the first dataset's shared DataFrame — which reads the view by
-      // name — could recompute against the replaced table if its cache
-      // blocks were evicted.
-      val sink = s"stream_counts_${Integer.toHexString(dir.hashCode).replace('-', '_')}"
-      graft.runtime.Stage.persistShared(dailyClickCounts(spark, dir, sink))
+      graft.runtime.Stage.persistShared(dailyClickCounts(spark, dir))
     }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Stream-stream interval join — the Flink-signature operator the reference's
@@ -38,33 +38,26 @@ object StreamingIntervalJoin {
   /** Runs the interval-join stream to completion; returns one row per
     * (view, click) attribution pair: (userId, view_id, click_id, gap_us).
     */
-  def attributedClicks(spark: SparkSession, dir: String,
-                       queryName: String = "stream_interval_join"): DataFrame =
-      StreamConf.withStatePartitions(spark) {
-    def src: DataFrame = StreamingHotTopics.eventsStream(spark, dir)
-
-    val views = src.filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-        col("ts").as("v_ts"))
-      .withWatermark("v_ts", "2 hours")
-
-    val clicks = src.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", "2 hours")
-
-    val joined = join(views, clicks)
-
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    spark.table(queryName)
-      .select(col("c_user").as("userId"), col("view_id"), col("click_id"),
-        (unix_micros(col("c_ts")) - unix_micros(col("v_ts"))).as("gap_us"))
+  def attributedClicks(spark: SparkSession, dir: String): DataFrame = {
+    val (views, clicks) = viewsClicks(StreamingHotTopics.eventsStream(spark, dir))
+    attribution(Replay.drain(join(views, clicks), "append", "stream_interval_join", dir),
+      col("c_user"))
   }
+
+  /** The two watermarked join legs over an events stream:
+    * views (v_user, view_id, v_ts) and clicks (c_user, click_id, c_ts).
+    */
+  private[streaming] def viewsClicks(events: DataFrame): (DataFrame, DataFrame) = {
+    def leg(kind: String, p: String, id: String): DataFrame =
+      events.filter(col("event_type") === kind)
+        .select(col("user_id").as(s"${p}_user"), col("event_id").as(id),
+          col("ts").as(s"${p}_ts"))
+        .withWatermark(s"${p}_ts", "2 hours")
+    (leg("view", "v", "view_id"), leg("click", "c", "click_id"))
+  }
+
+  /** A view/click join sink as (userId, view_id, click_id, gap_us). */
+  private[streaming] def attribution(sink: DataFrame, userId: Column): DataFrame =
+    sink.select(userId.as("userId"), col("view_id"), col("click_id"),
+      (unix_micros(col("c_ts")) - unix_micros(col("v_ts"))).as("gap_us"))
 }

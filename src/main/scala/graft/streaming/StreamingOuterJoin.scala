@@ -16,17 +16,13 @@ import org.apache.spark.sql.functions._
   *
   * End-of-input subtlety: watermarks advance only on data, so a finite
   * input's last `delay + interval` of unmatched views would sit in state
-  * forever and never emit. The runner therefore unions a far-future
-  * SENTINEL stream (one view + one click for a user id that exists nowhere
-  * else, timestamped max(ts) + 12h) which pushes both watermarks past every
-  * real row; Spark's no-data microbatch (`noDataMicroBatches`, on by
-  * default) then flushes the remaining state. The sentinel rows are dropped
-  * from the result. A production deployment doesn't need this — its stream
-  * never ends — but a correctness harness over a bounded file does.
+  * forever and never emit. The runners therefore read
+  * [[Replay.eventsWithSentinel]], whose far-future view + click push both
+  * watermarks past every real row; Spark's no-data microbatch
+  * (`noDataMicroBatches`, on by default) then flushes the remaining
+  * state. The sentinel rows are dropped from the result.
   */
 object StreamingOuterJoin {
-
-  private val SENTINEL_USER = -1L
 
   /** The join itself, batch/stream agnostic.
     * views: (v_user, view_id, v_ts); clicks: (c_user, click_id, c_ts).
@@ -78,36 +74,7 @@ object StreamingOuterJoin {
     * (userId, view_id, click_id, gap_us).
     */
   def viewFunnel(spark: SparkSession, dir: String): DataFrame =
-      StreamConf.withStatePartitions(spark) {
-    val sentinelDir = sharedSentinel(spark, dir)
-
-    def src(path: String, glob: Option[String]): DataFrame =
-      StreamingHotTopics.eventsStream(spark, path, glob)
-    val events = src(dir, Some("events.parquet")).union(src(sentinelDir, None))
-
-    val views = events.filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-        col("ts").as("v_ts"))
-      .withWatermark("v_ts", "2 hours")
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", "2 hours")
-
-    val sink = s"stream_outer_join_${Integer.toHexString(dir.hashCode).replace('-', '_')}"
-    val q = join(views, clicks).writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    spark.table(sink)
-      .filter(col("v_user") =!= SENTINEL_USER)
-      .select(col("v_user").as("userId"), col("view_id"), col("click_id"),
-        (unix_micros(col("c_ts")) - unix_micros(col("v_ts"))).as("gap_us"))
-  }
+    funnel(spark, dir, "stream_outer_join")(join)
 
   /** [[viewFunnel]] through the SALTED join: the hot-key set comes from a
     * one-row batch pre-pass (top user by event count, id-asc tie-break) —
@@ -117,9 +84,8 @@ object StreamingOuterJoin {
     * shares q102's batch oracle verbatim.
     */
   def viewFunnelSalted(spark: SparkSession, dir: String,
-                       salts: Int = 8): DataFrame =
-      StreamConf.withStatePartitions(spark) {
-    // Harness-only scalar (same class as writeSentinel's max(ts)): one
+                       salts: Int = 8): DataFrame = {
+    // Harness-only scalar (same class as the sentinel's max(ts)): one
     // row out of a groupBy — the "previous window" sketch stand-in. An
     // empty events table yields NO hot keys (joinSalted with an empty hot
     // set degenerates to the unsalted join) instead of a head() throw.
@@ -127,33 +93,7 @@ object StreamingOuterJoin {
       .groupBy(col("user_id")).agg(count(lit(1)).as("_n"))
       .orderBy(col("_n").desc, col("user_id").asc)
       .limit(1).collect().toSeq.map(_.getLong(0))
-
-    val sentinelDir = sharedSentinel(spark, dir)
-    def src(path: String, glob: Option[String]): DataFrame =
-      StreamingHotTopics.eventsStream(spark, path, glob)
-    val events = src(dir, Some("events.parquet")).union(src(sentinelDir, None))
-    val views = events.filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-        col("ts").as("v_ts"))
-      .withWatermark("v_ts", "2 hours")
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", "2 hours")
-
-    val sink = s"stream_salted_join_${Integer.toHexString(dir.hashCode).replace('-', '_')}"
-    val q = joinSalted(views, clicks, hot, salts).writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    spark.table(sink)
-      .filter(col("v_user") =!= SENTINEL_USER)
-      .select(col("v_user").as("userId"), col("view_id"), col("click_id"),
-        (unix_micros(col("c_ts")) - unix_micros(col("v_ts"))).as("gap_us"))
+    funnel(spark, dir, "stream_salted_join")(joinSalted(_, _, hot, salts))
   }
 
   /** [[viewFunnelSalted]] with the hot-key set detected by a STREAMING
@@ -171,14 +111,7 @@ object StreamingOuterJoin {
   def viewFunnelAutoSalted(spark: SparkSession, dir: String,
                            salts: Int = 8,
                            minShare: Double = 0.01,
-                           minCount: Long = 100L): DataFrame =
-      StreamConf.withStatePartitions(spark) {
-    val sentinelDir = sharedSentinel(spark, dir)
-    def src(path: String, glob: Option[String]): DataFrame =
-      StreamingHotTopics.eventsStream(spark, path, glob)
-    def events: DataFrame =
-      src(dir, Some("events.parquet")).union(src(sentinelDir, None))
-
+                           minCount: Long = 100L): DataFrame = {
     // Phase 1 — detection (its own streaming query + checkpoint). The
     // sentinel rows ride along and push the watermark past every real
     // window so the last windows CLOSE; the sentinel's own far-future
@@ -191,33 +124,12 @@ object StreamingOuterJoin {
     // NEW session/checkpoint, so this memo never crosses epochs.
     val hot = graft.runtime.Stage.shared(spark,
         s"hotkey-detect:$dir:$minShare:$minCount") {
-      graft.streaming.HotKeyDetector.detectBounded(spark, events,
+      HotKeyDetector.detectBounded(Replay.eventsWithSentinel(spark, dir),
         graft.runtime.Scratch.dir("hotkey_detect", dir),
         minShare = minShare, minCount = minCount)
     }
-
     // Phase 2 — the salted join under the detected epoch.
-    val views = events.filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-        col("ts").as("v_ts"))
-      .withWatermark("v_ts", "2 hours")
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", "2 hours")
-    val sink = s"stream_autosalted_${Integer.toHexString(dir.hashCode).replace('-', '_')}"
-    val q = joinSalted(views, clicks, hot, salts).writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    spark.table(sink)
-      .filter(col("v_user") =!= SENTINEL_USER)
-      .select(col("v_user").as("userId"), col("view_id"), col("click_id"),
-        (unix_micros(col("c_ts")) - unix_micros(col("v_ts"))).as("gap_us"))
+    funnel(spark, dir, "stream_autosalted")(joinSalted(_, _, hot, salts))
   }
 
   /** FULL OUTER variant (completing the stream-stream join modes next to
@@ -229,69 +141,28 @@ object StreamingOuterJoin {
     * view_id, click_id, gap_us) with nulls on whichever side is missing.
     */
   def viewFunnelFull(spark: SparkSession, dir: String): DataFrame =
-      StreamConf.withStatePartitions(spark) {
-    val sentinelDir = sharedSentinel(spark, dir)
-
-    def src(path: String, glob: Option[String]): DataFrame =
-      StreamingHotTopics.eventsStream(spark, path, glob)
-    val events = src(dir, Some("events.parquet")).union(src(sentinelDir, None))
-    val views = events.filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-        col("ts").as("v_ts"))
-      .withWatermark("v_ts", "2 hours")
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", "2 hours")
-
-    val sink = s"stream_full_outer_${Integer.toHexString(dir.hashCode).replace('-', '_')}"
-    val q = views.join(clicks,
+    funnel(spark, dir, "stream_full_outer", full = true) { (views, clicks) =>
+      views.join(clicks,
         expr("v_user = c_user AND c_ts >= v_ts AND c_ts <= v_ts + interval 1 hour"),
         "full_outer")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    spark.table(sink)
-      .filter((col("v_user").isNull || col("v_user") =!= SENTINEL_USER) &&
-        (col("c_user").isNull || col("c_user") =!= SENTINEL_USER))
-      .select(coalesce(col("v_user"), col("c_user")).as("userId"),
-        col("view_id"), col("click_id"),
-        (unix_micros(col("c_ts")) - unix_micros(col("v_ts"))).as("gap_us"))
-  }
-
-  /** The sentinel parquet for `dir`, written once per (session, dataset)
-    * and shared by all four funnel lanes (VERDICT r12 task 1): the content
-    * is identical across lanes — one far-future view + click — so each
-    * bench/verify invocation after the first skips the max(ts) scan and
-    * the two-row write.
-    */
-  private def sharedSentinel(spark: SparkSession, dir: String): String =
-    graft.runtime.Stage.shared(spark, s"outer-sentinel:$dir") {
-      val out = graft.runtime.Scratch.dir("outer_sentinel", dir)
-      writeSentinel(spark, dir, out)
-      out
     }
 
-  /** One far-future view + click under a user id no real row carries,
-    * schema-identical to events.parquet (ts in nanos).
+  /** The one funnel body: `join` over the sentinel-extended view/click
+    * legs, drained to the `lane` memory sink, sentinel rows dropped. A
+    * `full` join keeps rows missing either side.
     */
-  private def writeSentinel(spark: SparkSession, dir: String, out: String): Unit = {
-    // Harness-only scalar: single-row max() job sizing the bounded-input
-    // sentinel — not a data collect; no production-stream analogue.
-    val maxNs = graft.io.Tables.events(spark, dir)
-      .agg(max(unix_micros(col("ts")))).head().getLong(0) * 1000L
-    val farNs = maxNs + 12L * 3600L * 1000L * 1000L * 1000L
-    val rows = Seq(
-      (-1L, farNs, SENTINEL_USER, "view", 0.0, "{}"),
-      (-2L, farNs, SENTINEL_USER, "click", 0.0, "{}"))
-    spark.createDataFrame(rows)
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(out)
+  private def funnel(spark: SparkSession, dir: String, lane: String,
+                     full: Boolean = false)
+                    (join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val (views, clicks) =
+      StreamingIntervalJoin.viewsClicks(Replay.eventsWithSentinel(spark, dir))
+    val sink = Replay.drain(join(views, clicks), "append", lane, dir)
+    def real(user: String) = col(user) =!= Replay.SentinelUser
+    if (full)
+      StreamingIntervalJoin.attribution(
+        sink.filter((col("v_user").isNull || real("v_user")) &&
+          (col("c_user").isNull || real("c_user"))),
+        coalesce(col("v_user"), col("c_user")))
+    else StreamingIntervalJoin.attribution(sink.filter(real("v_user")), col("v_user"))
   }
 }

@@ -88,11 +88,9 @@ object StreamingTws {
   /** Replays the events stream through [[TypeCountProcessor]] and returns
     * the final per-(user, event_type) counts.
     */
-  def userTypeCounts(spark: SparkSession, dir: String): DataFrame =
-      StreamConf.withStatePartitions(spark) {
+  def userTypeCounts(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     withRocksDb(spark) {
-      val sink = s"tws_typecounts_${Integer.toHexString(dir.hashCode).replace('-', '_')}"
       val evs = StreamingHotTopics.eventsStream(spark, dir)
         .select(col("user_id").as("userId"), col("event_type").as("eventType"))
         .as[TypedEv]
@@ -100,14 +98,7 @@ object StreamingTws {
       val out = evs.groupByKey(_.userId)
         .transformWithState(new TypeCountProcessor,
           TimeMode.None(), OutputMode.Update())
-      val q = out.toDF().writeStream
-        .outputMode(OutputMode.Update)
-        .format("memory")
-        .queryName(sink)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      spark.table(sink)
+      Replay.drain(out.toDF(), "update", "tws_typecounts", dir)
         .groupBy(col("user_id"), col("event_type"))
         .agg(max(col("n_events")).as("n_events"))
     }
@@ -160,35 +151,20 @@ object StreamingTws {
     }
   }
 
-  /** Replays events through the timer processor: a far-future sentinel
-    * (excluded from state by user-id filter upstream of grouping is NOT
-    * possible — it must flow through the watermark, so it carries a
-    * sentinel key that is dropped from the result) advances the event-time
-    * watermark past every real timer, firing all summaries.
+  /** Replays events through the timer processor: the far-future sentinel
+    * of [[Replay.eventsWithSentinel]] (excluded from state by user-id
+    * filter upstream of grouping is NOT possible — it must flow through
+    * the watermark, so it carries a sentinel key that is dropped from the
+    * result) advances the event-time watermark past every real timer,
+    * firing all summaries.
     */
   def timerSummaries(spark: SparkSession, dir: String): DataFrame =
-      StreamConf.withStatePartitions(spark) {
-    import spark.implicits._
     withRocksDb(spark) {
-      val sink = s"tws_timers_${Integer.toHexString(dir.hashCode).replace('-', '_')}"
-      val sentinelDir = graft.runtime.Scratch.dir("tws_timer_sentinel", dir)
-      // Harness-only scalar: single-row max() job sizing the bounded-input
-      // sentinel — not a data collect; no production-stream analogue.
-      val maxUs = graft.io.Tables.events(spark, dir)
-        .agg(max(unix_micros(col("ts")))).head().getLong(0)
-      val farNs = (maxUs + 48L * 3600L * 1000000L) * 1000L
-      spark.createDataFrame(Seq((-1L, farNs, -1L, "view", 0.0, "{}")))
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(sentinelDir)
-
-      def src(path: String, glob: Option[String]): DataFrame =
-        StreamingHotTopics.eventsStream(spark, path, glob)
-      val raw = src(dir, Some("events.parquet")).union(src(sentinelDir, None))
+      val raw = Replay.eventsWithSentinel(spark, dir)
         .select(col("user_id").as("userId"),
           expr("unix_micros(ts) DIV 1000").as("tsMs")) // integral DIV: `/` is double division
-      runTimerSummaries(spark, raw, sink)
+      mergeTimerSink(Replay.drain(timerPipeline(spark, raw), "append", "tws_timers", dir))
     }
-  }
 
   /** The streaming transform of [[timerSummaries]] — watermark + timer
     * processor over a raw (userId, tsMs) stream. Factored out so specs can
@@ -219,27 +195,12 @@ object StreamingTws {
     */
   private[graft] def mergeTimerSink(sinkTable: DataFrame): DataFrame =
     sinkTable
-      .filter(col("user_id") =!= -1L)
+      .filter(col("user_id") =!= Replay.SentinelUser)
       .groupBy(col("user_id"))
       .agg(sum(col("n_events")).as("n_events"),
         min(col("first_ms")).as("first_ms"),
         max(col("last_ms")).as("last_ms"))
       .select(col("user_id"), col("n_events"), col("first_ms"), col("last_ms"))
-
-  /** Core of [[timerSummaries]]: run the pipeline to a memory sink in one
-    * drain, then merge.
-    */
-  private[graft] def runTimerSummaries(spark: SparkSession, raw: DataFrame,
-                                       sink: String): DataFrame = {
-    val q = timerPipeline(spark, raw).writeStream
-      .outputMode(OutputMode.Append)
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    mergeTimerSink(spark.table(sink))
-  }
 
   /** Scopes the RocksDB state-store provider (required by
     * transformWithState) to `f`, restoring the prior provider after.
@@ -258,13 +219,10 @@ object StreamingTws {
   /** Replays the (bounded) events stream through the processor and returns
     * the final per-user activity table.
     */
-  def userActivity(spark: SparkSession, dir: String): DataFrame =
-      StreamConf.withStatePartitions(spark) {
+  def userActivity(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     withRocksDb(spark) {
-      val sink = s"tws_activity_${Integer.toHexString(dir.hashCode).replace('-', '_')}"
-      val stream = StreamingHotTopics.eventsStream(spark, dir)
-      val evs = stream.select(
+      val evs = StreamingHotTopics.eventsStream(spark, dir).select(
           col("user_id").as("userId"),
           datediff(to_date(col("ts")), lit("1970-01-01")).as("dayOrd"),
           unix_micros(col("ts")).as("tsUs"))
@@ -273,16 +231,9 @@ object StreamingTws {
       val out = evs.groupByKey(_.userId)
         .transformWithState(new ActivityProcessor,
           TimeMode.None(), OutputMode.Update())
-      val q = out.toDF().writeStream
-        .outputMode(OutputMode.Update)
-        .format("memory")
-        .queryName(sink)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
       // Update mode emits one row per (user, micro-batch); the final state
       // is the row with the highest running count per user.
-      spark.table(sink)
+      Replay.drain(out.toDF(), "update", "tws_activity", dir)
         .groupBy(col("userId").as("user_id"))
         .agg(max(col("n_events")).as("n_events"),
           max(col("n_active_days")).as("n_active_days"),

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Stateful-streaming user profiles (SURVEY.md §2.8 idiomatic upgrade): the
   * reference rebuilds per-user state from scratch every simulated day
@@ -24,9 +24,7 @@ object StreamingUserProfiles {
   /** Drives the (bounded) events stream to completion and returns the final
     * per-user profile table (userId, n_clicks, n_distinct_news).
     */
-  def userClickProfiles(spark: SparkSession, dir: String,
-                        queryName: String = "stream_profiles"): DataFrame =
-      StreamConf.withStatePartitions(spark) {
+  def userClickProfiles(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
 
     val stream = StreamingHotTopics.eventsStream(spark, dir)
@@ -50,17 +48,9 @@ object StreamingUserProfiles {
       .groupByKey(_.userId)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout)(updateState)
 
-    val q = profiles.toDF().writeStream
-      .outputMode(OutputMode.Update)
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-
     // Update-mode memory sink may hold one row per state update; keep the
     // latest (max clicks) per user.
-    spark.table(queryName)
+    Replay.drain(profiles.toDF(), "update", "stream_profiles", dir)
       .groupBy(col("userId"))
       .agg(max(col("n_clicks")).as("n_clicks"),
         max(col("n_distinct_news")).as("n_distinct_news"))

@@ -261,7 +261,7 @@ object StreamStress {
     }
     def detect(): Seq[Long] = {
       val d = graft.streaming.HotKeyDetector.detectBounded(
-        spark, stream().withColumn("ts", col("ts").cast("timestamp")),
+        stream().withColumn("ts", col("ts").cast("timestamp")),
         s"$work/hotkey_detect")
       println(s"[stress] detector found hot keys: ${d.mkString(",")}")
       d

@@ -163,7 +163,7 @@ class PlanAndStreamSpec extends AnyFunSuite {
 
   test("stateful streaming user profiles equal the batch aggregation") {
     val streamed = graft.streaming.StreamingUserProfiles
-      .userClickProfiles(spark, sf, queryName = "stream_profiles_test")
+      .userClickProfiles(spark, sf)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     val batch = graft.io.Tables.clicks(spark, sf)
       .groupBy($"userId")
@@ -210,7 +210,7 @@ class PlanAndStreamSpec extends AnyFunSuite {
 
   test("streaming hot topics equals the batch aggregation") {
     val streamed = graft.streaming.StreamingHotTopics
-      .dailyClickCounts(spark, sf, queryName = "stream_hot_test")
+      .dailyClickCounts(spark, sf)
       .collect().map(r => (r.getDate(0).toString, r.getLong(1)) -> r.getLong(2)).toMap
     val batch = graft.io.Tables.clicks(spark, sf)
       .groupBy($"date", $"newsId").agg(count(lit(1)).as("clicks"))
@@ -764,7 +764,7 @@ class PlanAndStreamSpec extends AnyFunSuite {
     val schema = spark.read.parquet(s"$dir/ev").schema
     val stream = spark.readStream.schema(schema).parquet(s"$dir/ev")
     val detected = graft.streaming.HotKeyDetector.detectBounded(
-      spark, stream, s"$dir/work")
+      stream, s"$dir/work")
     assert(detected === Seq(7L))
   }
 
@@ -793,5 +793,71 @@ class PlanAndStreamSpec extends AnyFunSuite {
     val cached = graft.streaming.StreamingHotTopics
       .eventsSchemaFor(spark, path, None)
     assert(cached("ts").dataType === TimestampNTZType)
+  }
+
+  test("sentinel lanes (q183, q227, q204, q102, q207) equal their batch forms over one shared sentinel") {
+    import graft.streaming.{StreamingAppendAgg, StreamingOuterJoin, StreamingTws}
+    val ev = graft.io.Tables.events(spark, sf)
+    val views = ev.filter($"event_type" === "view")
+      .select($"user_id".as("v_user"), $"event_id".as("view_id"), $"ts".as("v_ts"))
+    val clicks = ev.filter($"event_type" === "click")
+      .select($"user_id".as("c_user"), $"event_id".as("click_id"), $"ts".as("c_ts"))
+    def attribution(joined: org.apache.spark.sql.DataFrame, user: org.apache.spark.sql.Column) =
+      joined.select(user.as("userId"), $"view_id", $"click_id",
+        (unix_micros($"c_ts") - unix_micros($"v_ts")).as("gap_us"))
+    val hourly = ev.groupBy($"event_type", date_trunc("hour", $"ts").as("h"))
+      .agg(count(lit(1)).as("n"))
+    val lanes = Seq(
+      ("q183", StreamingAppendAgg.dailyFinalizedClickCounts(spark, sf),
+        ev.filter($"event_type" === "click").groupBy(to_date($"ts").as("day"))
+          .agg(count(lit(1)).as("n_clicks"), round(sum($"value"), 2).as("sum_value"))),
+      ("q227", StreamingAppendAgg.dailyHourlyProfile(spark, sf),
+        hourly.groupBy($"event_type", to_date($"h").as("day"))
+          .agg(sum($"n").as("n_events"), count(lit(1)).as("n_active_hours"),
+            max($"n").as("max_hourly"))),
+      ("q204", StreamingTws.timerSummaries(spark, sf),
+        ev.select($"user_id", expr("unix_micros(ts) DIV 1000").as("ms"))
+          .groupBy($"user_id")
+          .agg(count(lit(1)).as("n_events"), min($"ms").as("first_ms"),
+            max($"ms").as("last_ms"))),
+      ("q102", StreamingOuterJoin.viewFunnel(spark, sf),
+        attribution(StreamingOuterJoin.join(views, clicks), $"v_user")),
+      ("q207", StreamingOuterJoin.viewFunnelFull(spark, sf),
+        attribution(views.join(clicks,
+          expr("v_user = c_user AND c_ts >= v_ts AND c_ts <= v_ts + interval 1 hour"),
+          "full_outer"), coalesce($"v_user", $"c_user"))))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    lanes.foreach { case (lane, streamed, batch) =>
+      val want = rows(batch)
+      assert(want.nonEmpty, lane)
+      assert(rows(streamed) === want, lane)
+    }
+    // every lane above reads the one per-dataset sentinel stage
+    val sentinelKeys = graft.runtime.Stage.buildLedger.keys
+      .filter(k => k.contains("sentinel") && k.endsWith(sf)).toSet
+    assert(sentinelKeys === Set(s"replay-sentinel:$sf"))
+  }
+
+  test("replay drain fails loudly: the batch error surfaces, no query stays active, partitions restored") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "7") // differs from the state-partition setting
+    try {
+      val stream = MemoryStream[Long]
+      stream.addData(1L, 2L)
+      val boom = udf { (x: Long) =>
+        if (x > 0) throw new IllegalStateException("boom")
+        x
+      }
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        graft.streaming.Replay.drain(stream.toDF().select(boom($"value")), "append",
+          "replay_fail_test", sf)
+      }
+      assert(spark.streams.active.isEmpty)
+      assert(spark.conf.get(key) === "7")
+    } finally spark.conf.set(key, saved)
   }
 }

@@ -1681,6 +1681,75 @@ def check_q286_star_rescue_clusters(con, sf_dir, spark_out):
     return errs[:5]
 
 
+def _cross_band_pairs(sigs, inc_ids, band=2):
+    """Every (incoming, base) doc pair sharing at least one LSH band key of
+    the md5 minhash mirror — the pair-complete probe across an incremental
+    cut. Docs without a signature (fewer than 3 tokens) have no bands."""
+    buckets = {}
+    for d, mins in sigs.items():
+        if mins[0] is None:
+            continue
+        for b in range(len(mins) // band):
+            buckets.setdefault((b, "".join(mins[b * band:(b + 1) * band])),
+                               []).append(d)
+    pairs = set()
+    for ds in buckets.values():
+        incs = [d for d in ds if d in inc_ids]
+        bases = [d for d in ds if d not in inc_ids]
+        for a in incs:
+            for b in bases:
+                pairs.add((a, b))
+    return pairs
+
+
+def _shingle_jaccard(toks, n=3):
+    """Exact 3-shingle-set Jaccard, rounded like the engine (6 places);
+    None when either doc has no shingles."""
+    sets = {d: {" ".join(tk[i:i + n]) for i in range(len(tk) - n + 1)}
+            for d, tk in toks.items() if len(tk) >= n}
+
+    def jac(a, b):
+        if a not in sets or b not in sets:
+            return None
+        inter = len(sets[a] & sets[b])
+        return spark_round(inter / (len(sets[a]) + len(sets[b]) - inter), 6)
+    return jac
+
+
+def check_q263_incremental_dedup(con, sf_dir, spark_out):
+    """Incremental ingestion screen from first principles: the incoming
+    docs (doc_id % 10 == 9) probe the base docs' bands; every collision
+    across the cut is scored by exact shingle Jaccard; per incoming doc
+    n_cands = colliding base docs, best_jaccard = their max (null with no
+    candidate), is_new iff best < 0.5 or null."""
+    sigs, toks = _minhash_sigs(con, sf_dir)
+    inc_ids = {d for d in toks if d % 10 == 9}
+    jac = _shingle_jaccard(toks)
+    scores = {}
+    for a, b in _cross_band_pairs(sigs, inc_ids):
+        scores.setdefault(a, []).append(jac(a, b))
+    got = dump(spark_out, "q263_incremental_dedup").set_index("doc_id")
+    errs = []
+    if len(got) != len(inc_ids) or set(got.index) != inc_ids:
+        errs.append(f"rows {len(got)} != incoming docs {len(inc_ids)}")
+        return errs
+    bad = 0
+    for d in inc_ids:
+        js = scores.get(d, [])
+        best = max(js) if js else None
+        g = got.loc[d]
+        gbest = None if pd.isna(g["best_jaccard"]) else float(g["best_jaccard"])
+        if int(g["n_cands"]) != len(js) or \
+           (best is None) != (gbest is None) or \
+           (best is not None and not close(gbest, best, 1e-9)) or \
+           bool(g["is_new"]) != (best is None or best < 0.5):
+            bad += 1
+    if bad:
+        errs.append(f"{bad}/{len(inc_ids)} incoming docs differ from the"
+                    f" band-probe + exact-jaccard recompute")
+    return errs
+
+
 def check_q288_incremental_clusters(con, sf_dir, spark_out):
     """Recompute of the INCREMENTAL construction itself (base star+rescue
     labels, batch star+rescue edges, pair-complete cross band probe,
@@ -1696,30 +1765,9 @@ def check_q288_incremental_clusters(con, sf_dir, spark_out):
     base_lab = _cc_labels(base_ids, base_edges)
     inc_edges, _ = _star_rescue_dup_edges(con, sf_dir, ids=inc_ids)
     # cross edges: EVERY band collision across the cut, exact jaccard >= tau
-    buckets = {}
-    for d, mins in sigs.items():
-        if mins[0] is None:
-            continue
-        for b in range(len(mins) // 2):
-            buckets.setdefault((b, "".join(mins[b * 2:(b + 1) * 2])),
-                               []).append(d)
-    sets = {d: {" ".join(tk[i:i + 3]) for i in range(len(tk) - 2)}
-            for d, tk in toks.items() if len(tk) >= 3}
-    cpairs = set()
-    for ds in buckets.values():
-        incs = [d for d in ds if d in inc_ids]
-        bases = [d for d in ds if d not in inc_ids]
-        for a in incs:
-            for b in bases:
-                cpairs.add((a, b))
-    cross = []
-    for a, b in cpairs:
-        if a not in sets or b not in sets:
-            continue
-        inter = len(sets[a] & sets[b])
-        j = spark_round(inter / (len(sets[a]) + len(sets[b]) - inter), 6)
-        if j >= 0.5:
-            cross.append((a, b))
+    jac = _shingle_jaccard(toks)
+    cross = [(a, b) for a, b in _cross_band_pairs(sigs, inc_ids)
+             if (j := jac(a, b)) is not None and j >= 0.5]
     touched = {base_lab[b] for _, b in cross}
     touched_members = {v for v in base_ids if base_lab[v] in touched}
     label_stars = [(base_lab[v], v) for v in touched_members
@@ -6637,6 +6685,7 @@ CHECKS = {
     "q285_star2_dedup_clusters": check_q285_star2_clusters,
     "q286_star_rescue_clusters": check_q286_star_rescue_clusters,
     "q288_incremental_clusters": check_q288_incremental_clusters,
+    "q263_incremental_dedup": check_q263_incremental_dedup,
     "q282_estimate_savings": check_q282_estimate_savings,
     "q283_estimate_data_card": check_q283_estimate_data_card,
     "q39_textrank_kw": check_q39,
