@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 object Bench {
@@ -56,6 +57,13 @@ object Bench {
     sb.append(s"""},"queries_shown":$shown}""")
     sb.toString
   }
+
+  /** Janino compiles so far in this JVM: generated classes that missed
+    * Spark's codegen cache (sized in [[graft.runtime.GraftScale]]). A warm
+    * lane that still compiles emits new source on every run, e.g. a literal
+    * that changes between runs.
+    */
+  private[graft] def codegenCompiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -196,12 +204,16 @@ object Bench {
         .asScala.map(_.getCollectionTime.max(0L)).sum
     }
     val gcSecs = mutable.LinkedHashMap[String, Double]()
+    // Per-lane Janino compiles over the k timed samples (see
+    // codegenCompiles).
+    val compileCounts = mutable.LinkedHashMap[String, Long]()
     val results = selected.filter { case (n, _) => !failed.contains(n) }
       .flatMap { case (name, fn) =>
         sweepIfPressured()
-        val gc0 = gcMillis
+        val (gc0, c0) = (gcMillis, codegenCompiles)
         val run = sampleLane(k)(runLane(fn))
         gcSecs(name) = (gcMillis - gc0) / 1e3
+        compileCounts(name) = codegenCompiles - c0
         run match {
           case Right(samples) => Some(name -> samples)
           case Left(e) => fail("sample", name, e); None
@@ -223,7 +235,10 @@ object Bench {
     val total = if (medians.nonEmpty) medians.values.sum else 0.0
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""k":$k,"stat":"median","samples":$samplesJson,"sf":"$sfDir",""" +
-      s""""gc_sec":${numMap(gcSecs)},"warmup_sec":${numMap(warmupSecs)},""" +
+      s""""gc_sec":${numMap(gcSecs)},""" +
+      s""""codegen_compiles":${compileCounts.map { case (k0, n) => s"\"$k0\":$n" }
+        .mkString("{", ",", "}")},""" +
+      s""""warmup_sec":${numMap(warmupSecs)},""" +
       s""""failed":${failed.map(n => s"\"$n\"").mkString("[", ",", "]")},""" +
       s""""stage_build_sec":${numMap(graft.runtime.Stage.buildLedger)},""" +
       s""""sweeps":{"count":$sweepCount,"sec":${math.rint(sweepSecTotal * 1000) / 1000}}}"""

@@ -26,7 +26,7 @@ object Bucketed {
     */
   def ordersLineitem(s: SparkSession, d: String): (DataFrame, DataFrame) =
     graft.runtime.Stage.shared(s, s"bucketed-orders-lineitem:$BUCKETS:$d") {
-      val tag = Integer.toHexString(d.hashCode).replace('-', '_')
+      val tag = graft.runtime.Scratch.tag(d)
       val root = graft.runtime.Scratch.dir("bucketed", d)
       val oname = s"graft_bk_orders_$tag"
       val lname = s"graft_bk_lineitem_$tag"

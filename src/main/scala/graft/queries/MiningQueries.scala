@@ -1089,7 +1089,7 @@ object MiningQueries {
     // catalog-name query — the metastore DDL lane next to the temp-view
     // lane (q48/q128). The table is rebuilt idempotently per run.
     "q172_catalog_table" -> ((s, d) => {
-      val tbl = s"graft_cat_orders_${Integer.toHexString(d.hashCode).replace('-', '_')}"
+      val tbl = s"graft_cat_orders_${graft.runtime.Scratch.tag(d)}"
       s.sql(s"DROP TABLE IF EXISTS $tbl")
       s.sql(s"""CREATE TABLE $tbl (
                |  o_orderkey BIGINT, o_orderpriority STRING, o_totalprice DOUBLE)

@@ -45,13 +45,20 @@ object Scratch {
     hbFile.delete()
   }
 
+  /** Per-dataset name tag, safe in table, view and file names: the hex of
+    * the dir's hash with `-` as `_`. Names built from it keep two datasets
+    * of one session apart.
+    */
+  def tag(datasetDir: String): String =
+    Integer.toHexString(datasetDir.hashCode).replace('-', '_')
+
   /** Scratch dir for (lane, dataset): `graft_<lane>_<jvmTag>_<dsTag>`.
     * Not created on disk — every caller writes with mode(overwrite).
     */
   def dir(lane: String, datasetDir: String): String = {
     Heartbeat.ensureKeyed(hbFile)(touchHeartbeat())
     if (swept.compareAndSet(false, true)) sweepStale()
-    val p = s"$root/graft_${lane}_${jvmTag}_${graft.streaming.Replay.tag(datasetDir)}"
+    val p = s"$root/graft_${lane}_${jvmTag}_${tag(datasetDir)}"
     created.add(p)
     p
   }

@@ -26,18 +26,16 @@ object Replay {
   /** User id carried only by sentinel rows. */
   val SentinelUser: Long = -1L
 
-  /** Per-dataset name tag: a fixed sink name would be re-registered by a
-    * second dataset in the same session, and the first dataset's shared
-    * DataFrame — which reads the view by name — could recompute against
-    * the replaced table if its cache blocks were evicted.
-    */
-  def tag(dir: String): String = Integer.toHexString(dir.hashCode).replace('-', '_')
-
   /** Runs `df` into the memory sink `<lane>_<tag(dir)>` until every
-    * available row is processed, and returns the sink table.
+    * available row is processed, and returns the sink table. The tag is
+    * per dataset ([[graft.runtime.Scratch.tag]]): a fixed sink name would
+    * be re-registered by a second dataset in the same session, and the
+    * first dataset's shared DataFrame — which reads the view by name —
+    * could recompute against the replaced table if its cache blocks were
+    * evicted.
     */
   def drain(df: DataFrame, mode: String, lane: String, dir: String): DataFrame = {
-    val sink = s"${lane}_${tag(dir)}"
+    val sink = s"${lane}_${graft.runtime.Scratch.tag(dir)}"
     run(df.sparkSession, df.writeStream.outputMode(mode).format("memory").queryName(sink))
     df.sparkSession.table(sink)
   }

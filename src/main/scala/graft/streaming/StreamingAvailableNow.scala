@@ -19,7 +19,7 @@ object StreamingAvailableNow {
     * sink). Returns (day, n_clicks).
     */
   def dailyClickCounts(spark: SparkSession, dir: String): DataFrame = {
-    val sink = s"avail_now_${Replay.tag(dir)}"
+    val sink = s"avail_now_${graft.runtime.Scratch.tag(dir)}"
     val counts = StreamingHotTopics.eventsStream(spark, dir)
       .filter(col("event_type") === "click")
       .groupBy(to_date(col("ts")).as("day"))

@@ -1,11 +1,13 @@
 package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Pins the bench harness's failure rule: a lane that throws is a failure,
-  * never a (fast) sample, and the summary line still fits its budget.
+  * never a (fast) sample, and the summary line still fits its budget; and
+  * the per-lane compile counter counts cache misses, not cache hits.
   */
 class BenchSpec extends AnyFunSuite {
 
@@ -40,5 +42,20 @@ class BenchSpec extends AnyFunSuite {
     assert(shown.nonEmpty && shown.size === json.get("queries_shown").asInt())
     assert(shown.head === "q300_some_lane_name") // slowest first
     assert(!shown.exists(failed.contains))
+  }
+
+  test("codegenCompiles: a new query compiles, its identical re-run hits the cache") {
+    val spark = SparkSession.builder()
+      .master("local[2]")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    // a literal no other suite uses, so the first run's source is new
+    def run(): Unit = { spark.range(100).selectExpr("sum(id * 7919 + 104723)").collect(); () }
+    val c0 = Bench.codegenCompiles
+    run()
+    val c1 = Bench.codegenCompiles
+    assert(c1 > c0)
+    run()
+    assert(Bench.codegenCompiles === c1)
   }
 }

@@ -12,6 +12,8 @@ import java.nio.file.Files
   * ADVICE-hardened path for entry points that never call configure) is
   * pinned indirectly: Stage.cacheLevel is private, so the spec pins the
   * property VALUES configure publishes, which are the only inputs to it.
+  * The same goes for the generated-code cache size: Spark reads it once
+  * per JVM, so the spec pins the system property configure sets.
   */
 class GraftScaleSpec extends AnyFunSuite {
 
@@ -22,12 +24,12 @@ class GraftScaleSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private def withRestoredProp[T](body: => T): T = {
-    val saved = sys.props.get("graft.stage.ser")
+  private def withRestoredProp[T](key: String)(body: => T): T = {
+    val saved = sys.props.get(key)
     try body
     finally saved match {
-      case Some(v) => System.setProperty("graft.stage.ser", v); ()
-      case None => System.clearProperty("graft.stage.ser"); ()
+      case Some(v) => System.setProperty(key, v); ()
+      case None => System.clearProperty(key); ()
     }
   }
 
@@ -41,7 +43,7 @@ class GraftScaleSpec extends AnyFunSuite {
   }
 
   test("configure: small dir publishes ser=false, large dir ser=true") {
-    withRestoredProp {
+    withRestoredProp("graft.stage.ser") {
       val small = Files.createTempDirectory("gs-small").toFile
       Files.write(new java.io.File(small, "t.parquet").toPath,
         Array.fill[Byte](1024)(0))
@@ -56,6 +58,20 @@ class GraftScaleSpec extends AnyFunSuite {
       assert(GraftScale.configure(large.getPath))
       assert(sys.props("graft.stage.ser") === "true")
     }
+  }
+
+  test("configure: sizes the codegen cache when unset, keeps an explicit value") {
+    val key = GraftScale.CodegenCacheKey
+    withRestoredProp("graft.stage.ser")(withRestoredProp(key) {
+      val dir = Files.createTempDirectory("gs-codegen").toFile.getPath
+      System.clearProperty(key)
+      GraftScale.configure(dir)
+      assert(sys.props.get(key) === Some(GraftScale.CodegenCacheEntries.toString))
+      assert(GraftScale.CodegenCacheEntries > 100) // above Spark's default
+      System.setProperty(key, "37")
+      GraftScale.configure(dir)
+      assert(sys.props.get(key) === Some("37"))
+    })
   }
 
   test("Stage.shared memoizes per key and rebuilds after evictSession") {

@@ -6523,6 +6523,90 @@ def check_q277_repetition(con, sf_dir, spark_out):
     return errs[:5]
 
 
+# ------------------------------------------------- streaming lanes
+# The streaming lanes run a watermarked query over the events file; these
+# recompute what the query must return once every row is processed, from
+# the raw events with numpy, without windows, watermarks or state.
+
+def _events_us(con, sf_dir):
+    """Events with `ts` as explicit µs since epoch (int64)."""
+    ev = load(con, sf_dir, "events", "event_id, ts, user_id, event_type")
+    ev["ts_us"] = ev["ts"].to_numpy().astype("datetime64[us]").astype("int64")
+    return ev
+
+
+def check_q36_streaming_hot(con, sf_dir, spark_out):
+    """Click counts per (UTC day, event_id % 500): every click lands in
+    exactly one 1-day window, so the drained complete-mode table is the
+    plain count over all clicks."""
+    from collections import Counter
+    ev = _events_us(con, sf_dir)
+    c = ev[ev["event_type"] == "click"]
+    day_us = 86400 * 1000000
+    # floor division: days before 1970 still floor to their own midnight
+    days = c["ts_us"].to_numpy() // day_us
+    news = np.fmod(c["event_id"].to_numpy(), 500)  # Spark's % truncates
+    exp = Counter(zip(days.tolist(), news.tolist()))
+    got = dump(spark_out, "q36_streaming_hot")
+    gdays = (pd.to_datetime(got["day"]).to_numpy().astype("datetime64[D]")
+             .astype("int64"))
+    have = {}
+    for d, n, k in zip(gdays.tolist(), got["newsId"].tolist(),
+                       got["clicks"].tolist()):
+        have[(d, n)] = have.get((d, n), 0) + int(k)
+    errs = []
+    if len(got) != len(exp):
+        errs.append(f"row count {len(got)} != {len(exp)} (day, newsId) groups")
+    bad = sum(1 for key, k in exp.items() if have.get(key) != k)
+    extra = sum(1 for key in have if key not in exp)
+    if bad or extra:
+        errs.append(f"{bad}/{len(exp)} groups miscounted, {extra} extra groups")
+    return errs
+
+
+def check_q66_interval_join(con, sf_dir, spark_out, window_us=3600 * 1000000):
+    """Click attribution pairs: every (view, click) of one user with
+    0 <= click_ts - view_ts <= 1 h, found by binary search over each
+    user's views sorted by time."""
+    ev = _events_us(con, sf_dir)
+    v = ev[ev["event_type"] == "view"]
+    c = ev[ev["event_type"] == "click"]
+    users = pd.Index(pd.unique(ev["user_id"]))
+    t0 = int(ev["ts_us"].min())
+    # one sortable key per (user, ts): users are stride apart, and stride
+    # exceeds the time span plus the window, so no search crosses users
+    stride = int(ev["ts_us"].max()) - t0 + window_us + 1
+    vkey = users.get_indexer(v["user_id"]) * stride + (v["ts_us"].to_numpy() - t0)
+    order = np.argsort(vkey, kind="stable")
+    vkey = vkey[order]
+    vid = v["event_id"].to_numpy()[order]
+    vts = v["ts_us"].to_numpy()[order]
+    ckey = users.get_indexer(c["user_id"]) * stride + (c["ts_us"].to_numpy() - t0)
+    lo = np.searchsorted(vkey, ckey - window_us, side="left")
+    hi = np.searchsorted(vkey, ckey, side="right")
+    n = hi - lo
+    ci = np.repeat(np.arange(len(c)), n)
+    vi = np.concatenate([np.arange(a, b) for a, b in zip(lo, hi)]) \
+        if len(c) else np.array([], dtype="int64")
+    exp = pd.DataFrame({
+        "userId": c["user_id"].to_numpy()[ci], "view_id": vid[vi],
+        "click_id": c["event_id"].to_numpy()[ci],
+        "gap_us": c["ts_us"].to_numpy()[ci] - vts[vi]})
+    cols = ["userId", "view_id", "click_id", "gap_us"]
+    got = dump(spark_out, "q66_interval_join")[cols].astype("int64")
+    errs = []
+    if len(got) != len(exp):
+        errs.append(f"row count {len(got)} != {len(exp)} attribution pairs")
+    diff = exp.astype("int64").merge(got, on=cols, how="outer", indicator=True)
+    missing = int((diff["_merge"] == "left_only").sum())
+    extra = int((diff["_merge"] == "right_only").sum())
+    dup = int(got.duplicated().sum())
+    if missing or extra or dup:
+        errs.append(f"{missing} pairs missing, {extra} extra, {dup} duplicated"
+                    f" (of {len(exp)})")
+    return errs
+
+
 CHECKS = {
     "q50_als_recommend": check_q50_als_audit,
     "q74_sketches": check_q74_sketch_audit,
@@ -6686,6 +6770,8 @@ CHECKS = {
     "q286_star_rescue_clusters": check_q286_star_rescue_clusters,
     "q288_incremental_clusters": check_q288_incremental_clusters,
     "q263_incremental_dedup": check_q263_incremental_dedup,
+    "q36_streaming_hot": check_q36_streaming_hot,
+    "q66_interval_join": check_q66_interval_join,
     "q282_estimate_savings": check_q282_estimate_savings,
     "q283_estimate_data_card": check_q283_estimate_data_card,
     "q39_textrank_kw": check_q39,
