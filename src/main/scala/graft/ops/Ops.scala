@@ -34,7 +34,12 @@ object Ops {
     * window [today, today+numDays], both inclusive.
     *
     * Kept as a Column predicate (never a UDF) so it pushes down to the
-    * parquet scan (SURVEY.md §4 design rule).
+    * parquet scan (SURVEY.md §4 design rule). Its bounds are literals, which
+    * is right for a day fixed in the query (the pushed filter prunes row
+    * groups). A caller that reruns one plan shape with a new day in the same
+    * session writes its bounds with [[graft.functions.BoundDate]] instead, as
+    * the loop-day pipelines do: a literal day compiles new classes for every
+    * day, a bound day reuses them but does not push into the scan.
     */
   def dateZone(dateCol: Column, today: java.sql.Date, numDays: Int, direction: Int): Column =
     if (direction == 0) dateCol.between(date_sub(lit(today), numDays), lit(today))
@@ -44,6 +49,8 @@ object Ops {
     * /root/reference/TF_IDF.java:131,164; applied only at TF_IDF.java:133-138;
     * impl absent). Frozen spec: membership in [max(from, today-gap),
     * min(to, today)] — a past-gap window clamped to the loop bounds.
+    * Literal bounds that push into the parquet scan; for a day that changes
+    * between calls, see the [[dateZone]] note on [[graft.functions.BoundDate]].
     */
   def dateLoopFilter(dateCol: Column, gap: Int, from: java.sql.Date, to: java.sql.Date,
                      today: java.sql.Date): Column = {

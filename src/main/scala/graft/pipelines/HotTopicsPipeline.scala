@@ -1,5 +1,6 @@
 package graft.pipelines
 
+import graft.functions.BoundDate
 import graft.model.Scene
 import graft.ops.Ops
 import org.apache.spark.sql.DataFrame
@@ -22,20 +23,28 @@ import org.apache.spark.sql.functions._
   */
 object HotTopicsPipeline {
 
-  /** Per-day hot-topic counts: (day, newsId, clicks, rn), rn ≤ numRecommendations. */
-  def topicsPerDay(clicks: DataFrame, scene: Scene): DataFrame = {
+  /** Per-day window click counts: (day, newsId, clicks), each click counted
+    * for every loop-day `day ∈ [date, date+numDays] ∩ [from, to]`. The scene
+    * bounds are [[graft.functions.BoundDate]]s, so rerunning this for the
+    * next day reuses the day before's generated code.
+    */
+  def windowCounts(clicks: DataFrame, scene: Scene): DataFrame = {
+    val (from, to) = (BoundDate.of(scene.fromDate), BoundDate.of(scene.toDate))
     val contributesTo = explode(sequence(
-      greatest(col("date"), lit(scene.fromDate)),
-      least(date_add(col("date"), scene.numDays), lit(scene.toDate)),
+      greatest(col("date"), from),
+      least(date_add(col("date"), scene.numDays), to),
       expr("interval 1 day")))
-    val counts = clicks
-      .filter(col("date").between(date_sub(lit(scene.fromDate), scene.numDays), lit(scene.toDate)))
+    clicks
+      .filter(col("date").between(date_sub(from, scene.numDays), to))
       .withColumn("day", contributesTo)
       .groupBy(col("day"), col("newsId"))
       .agg(sum(col("count")).as("clicks"))
-    Ops.topKPerGroup(counts, Seq("day"),
-      Seq(col("clicks").desc, col("newsId").asc), scene.numRecommendations)
   }
+
+  /** Per-day hot-topic counts: (day, newsId, clicks, rn), rn ≤ numRecommendations. */
+  def topicsPerDay(clicks: DataFrame, scene: Scene): DataFrame =
+    Ops.topKPerGroup(windowCounts(clicks, scene), Seq("day"),
+      Seq(col("clicks").desc, col("newsId").asc), scene.numRecommendations)
 
   /** Reference-shaped output: one row per day with the ranked news list
     * (RecommendationModel, HotTopics.java:44,48-53).

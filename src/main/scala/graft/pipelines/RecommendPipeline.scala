@@ -1,9 +1,10 @@
 package graft.pipelines
 
+import graft.functions.BoundDate
 import graft.model.{RecServing, Scene, SimilarityAlgorithm}
 import graft.ops.Ops
 import graft.sim.Scoring
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The shared recommendation skeleton of the two content-based pipelines
@@ -24,6 +25,11 @@ import org.apache.spark.sql.functions._
   * (graft.sim.Scoring) instead of a cross product. Ties in scores break
   * newsId-asc (frozen spec; the reference's sortGroup tie order is
   * unspecified).
+  *
+  * Every scene bound enters the plan as a [[graft.functions.BoundDate]], not
+  * a literal: a daily loop reruns this pipeline with a new day, and a bound
+  * day keeps each day's generated code identical to the day before, so the
+  * loop hits Spark's codegen cache instead of compiling new classes.
   */
 object RecommendPipeline {
 
@@ -53,13 +59,16 @@ object RecommendPipeline {
     row.getLong(0)
   }
 
-  /** Active (day, userId) pairs within the scene range (reference A1 +
+  /** Active (date, userId) pairs within the scene range (reference A1 +
     * per-day filter).
     */
-  private def activeUsersOf(clicks: DataFrame, scene: Scene): DataFrame =
+  def activeUsers(clicks: DataFrame, scene: Scene): DataFrame =
     Ops.distinctUsersPerDay(clicks)
-      .filter(col("date").between(lit(scene.fromDate), lit(scene.toDate)))
-      .withColumnRenamed("date", "day")
+      .filter(col("date").between(BoundDate.of(scene.fromDate), BoundDate.of(scene.toDate)))
+
+  /** [[activeUsers]] keyed (day, userId), as the day joins below use it. */
+  private def activeUsersOf(clicks: DataFrame, scene: Scene): DataFrame =
+    activeUsers(clicks, scene).withColumnRenamed("date", "day")
 
   /** Day-invariant (userId, newsId=id, score) pairs with score > 0, scored
     * once via the inverted-index word join.
@@ -74,8 +83,7 @@ object RecommendPipeline {
     // keyed the word join on (day, word) — numDays× redundant arithmetic and
     // a numDays× larger pre-aggregation shuffle. At 100 TB that difference
     // is the job.)
-    val inRange = newsKw.filter(col("date")
-      .between(lit(scene.fromDate), date_add(lit(scene.toDate), scene.numDays)))
+    val inRange = newsKw.filter(candidateDate(scene))
     // Serving posture (see [[graft.model.RecServing]]): the DEFAULT is the
     // WAND-lite posting cap, bounding the word join's per-word fan-out to
     // |users| × cap — the exact posture's sf10 spill envelope (~100 GB per
@@ -135,6 +143,13 @@ object RecommendPipeline {
       .select(col("userId"), col("id"), col("score"))
   }
 
+  /** A news `date` some loop-day of the scene can recommend:
+    * date ∈ [from, to+numDays].
+    */
+  private def candidateDate(scene: Scene): Column =
+    col("date").between(BoundDate.of(scene.fromDate),
+      date_add(BoundDate.of(scene.toDate), scene.numDays))
+
   /** Distinct (id, date) pairs restricted to [from, to+numDays]. pairScores
     * pre-filters the SCORED side to this range, but a news id can carry a
     * second, out-of-range date row; joining the unfiltered distinct would
@@ -142,8 +157,15 @@ object RecommendPipeline {
     * runtime. Every recommendAll/newsDaysOf consumer must go through here.
     */
   private def newsDatesInRange(newsKw: DataFrame, scene: Scene): DataFrame =
-    newsKw.select("id", "date").distinct()
-      .filter(col("date").between(lit(scene.fromDate), date_add(lit(scene.toDate), scene.numDays)))
+    newsKw.select("id", "date").distinct().filter(candidateDate(scene))
+
+  /** The loop-days a news doc dated `date` is a candidate for:
+    * day ∈ [date-numDays, date] ∩ [from, to], one row each.
+    */
+  private def loopDays(scene: Scene): Column = explode(sequence(
+    greatest(date_sub(col("date"), scene.numDays), BoundDate.of(scene.fromDate)),
+    least(col("date"), BoundDate.of(scene.toDate)),
+    expr("interval 1 day")))
 
   /** Day eligibility: news doc is a candidate for day ∈ [date-numDays, date]
     * ∩ [from, to] (direction-1 DateZoneFilter) — exploded once per news doc
@@ -151,10 +173,7 @@ object RecommendPipeline {
     */
   private def newsDaysOf(newsKw: DataFrame, scene: Scene): DataFrame =
     newsDatesInRange(newsKw, scene)
-      .withColumn("day", explode(sequence(
-        greatest(date_sub(col("date"), scene.numDays), lit(scene.fromDate)),
-        least(col("date"), lit(scene.toDate)),
-        expr("interval 1 day"))))
+      .withColumn("day", loopDays(scene))
       .select(col("id"), col("day"))
 
   /** Scored (date, userId, newsId, score) for every active (user, day) ×
@@ -210,10 +229,7 @@ object RecommendPipeline {
           .drop("_prn")
         // news dates are within [from, to+numDays] (newsDatesInRange
         // filter), so the sequence bounds are always valid
-        val perDay = pre.withColumn("day", explode(sequence(
-            greatest(date_sub(col("date"), scene.numDays), lit(scene.fromDate)),
-            least(col("date"), lit(scene.toDate)),
-            expr("interval 1 day"))))
+        val perDay = pre.withColumn("day", loopDays(scene))
           .join(activeUsers, Seq("day", "userId"), "left_semi")
           .select(col("day").as("date"), col("userId"), col("id").as("newsId"), col("score"))
         val ranked = Ops.topKPerGroup(perDay, Seq("date", "userId"),
@@ -259,10 +275,7 @@ object RecommendPipeline {
             struct((-col("score")).as("_s"), col("id").as("newsId"))).as("_batch"))
         // news dates are within [from, to+numDays] (newsDatesInRange
         // filter), so the sequence bounds are always valid
-        batched.withColumn("day", explode(sequence(
-            greatest(date_sub(col("date"), scene.numDays), lit(scene.fromDate)),
-            least(col("date"), lit(scene.toDate)),
-            expr("interval 1 day"))))
+        batched.withColumn("day", loopDays(scene))
           .join(activeUsers, Seq("day", "userId"), "left_semi")
           .groupBy(col("userId"), col("day"))
           .agg(transform(array_sort(flatten(collect_list(col("_batch")))),

@@ -206,16 +206,7 @@ object RecQueries {
     // oracle as the window form.
     "q47_hot_topics_agg" -> ((s, d) => {
       import graft.functions.TopKAggregator
-      val contributesTo = explode(sequence(
-        greatest(col("date"), lit(scene.fromDate)),
-        least(date_add(col("date"), scene.numDays), lit(scene.toDate)),
-        expr("interval 1 day")))
-      val counts = Tables.clicks(s, d)
-        .filter(col("date").between(date_sub(lit(scene.fromDate), scene.numDays), lit(scene.toDate)))
-        .withColumn("day", contributesTo)
-        .groupBy(col("day"), col("newsId"))
-        .agg(sum(col("count")).as("clicks"))
-      counts.groupBy(col("day"))
+      HotTopicsPipeline.windowCounts(Tables.clicks(s, d), scene).groupBy(col("day"))
         .agg(TopKAggregator.topK(scene.numRecommendations)(
           col("clicks").cast("double"), col("newsId")).as("ids"))
         .select(col("day"), posexplode(col("ids")).as(Seq("pos", "newsId")))
@@ -251,8 +242,7 @@ object RecQueries {
     "q24_precision_hot" -> ((s, d) => {
       val clicks = Tables.clicks(s, d)
       val recs = HotTopicsPipeline.recommendAll(clicks, scene)
-      val perUser = Ops.distinctUsersPerDay(clicks)
-        .filter(col("date").between(lit(scene.fromDate), lit(scene.toDate)))
+      val perUser = RecommendPipeline.activeUsers(clicks, scene)
         .join(recs, "date")
         .select(col("userId"), col("date"), col("news"))
       PrecisionEval.precisions(perUser, clicks)

@@ -3,8 +3,9 @@ package graft
 import graft.model.{Scene, SimilarityAlgorithm}
 import graft.pipelines._
 import graft.sim.{Scoring, Similarities}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Date
 
@@ -234,6 +235,107 @@ class PipelineSpec extends AnyFunSuite {
     val pairs = RecommendPipeline.scoredPairs(userKw, newsKw, clicks, scene).collect()
     assert(pairs.length === 1)
     assert(pairs(0).getDouble(3) === 0.25) // 1 common / (2*2), the product denominator
+  }
+
+  // --- Loop-day bounds: bound values, not code literals.
+
+  private val dayD = d("2024-01-10")
+  private val dayD1 = d("2024-01-11")
+
+  /** Inputs whose day D and day D+1 runs have the same shape: both days
+    * have active users, candidate news and clicks in their windows.
+    */
+  private def loopUserKw: DataFrame = Seq(
+    (1L, "spark", 2.0), (1L, "flink", 1.0), (2L, "spark", 1.0)).toDF("userId", "word", "value")
+  private def loopNewsKw: DataFrame = Seq(
+    (10L, d("2024-01-10"), "spark", 3.0), (10L, d("2024-01-10"), "flink", 1.0),
+    (11L, d("2024-01-11"), "spark", 2.0), (12L, d("2024-01-11"), "flink", 4.0),
+    (13L, d("2024-01-12"), "spark", 1.0), (14L, d("2024-01-12"), "flink", 2.0)
+  ).toDF("id", "date", "word", "value")
+  private def loopClicks: DataFrame = Seq(
+    (1L, 10L, d("2024-01-09"), 2), (2L, 11L, d("2024-01-09"), 1),
+    (1L, 10L, d("2024-01-10"), 1), (2L, 11L, d("2024-01-10"), 2),
+    (1L, 12L, d("2024-01-11"), 1), (2L, 13L, d("2024-01-11"), 3)
+  ).toDF("userId", "newsId", "date", "count")
+
+  private def loopScene(day: Date) = Scene(numDays = 1, fromDate = day, toDate = day,
+    numRecommendations = 2, similarityAlgorithm = SimilarityAlgorithm.EuclideanDistance)
+
+  /** Runs `body` with the given session confs, restoring the prior values. */
+  private def withConf[T](confs: (String, String)*)(body: => T): T = {
+    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  // Adaptive execution is off here: AQE numbers whole-stage codegen stages in
+  // the order its query stages finish, which varies from run to run, and a
+  // class whose only change is its stage number is compiled again. Without
+  // AQE the day bound is the one thing that can differ between the days.
+  test("loop-day rerun: day D+1 compiles no class that day D did not") {
+    def runDay(day: Date): Unit = {
+      val scene = loopScene(day)
+      RecommendPipeline.recommendAll(loopUserKw, loopNewsKw, loopClicks, scene, Some(2)).collect()
+      RecommendPipeline.recommendAll(loopUserKw, loopNewsKw, loopClicks, scene, None).collect()
+      HotTopicsPipeline.recommendAll(loopClicks, scene).collect()
+      ()
+    }
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      runDay(dayD)
+      val c0 = Bench.codegenCompiles
+      runDay(dayD1)
+      assert(Bench.codegenCompiles === c0)
+    }
+  }
+
+  test("BoundDate bounds equal lit bounds row for row, with and without codegen") {
+    val dates = (0 to 20).map(i => (i.toLong, Date.valueOf(java.time.LocalDate.of(2024, 1, 1)
+      .plusDays(i.toLong)))).toDF("id", "date")
+    val (from, to, n) = (d("2024-01-05"), d("2024-01-12"), 3)
+    // the pipelines' three bound shapes: a window filter, a shifted window
+    // filter, and the clamped day-explode
+    def shapes(b: Date => Column): Seq[DataFrame] = Seq(
+      dates.filter(col("date").between(b(from), b(to))),
+      dates.filter(col("date").between(date_sub(b(from), n), date_add(b(to), n))),
+      dates.filter(col("date").between(b(from), date_add(b(to), n)))
+        .withColumn("day", explode(sequence(
+          greatest(date_sub(col("date"), n), b(from)), least(col("date"), b(to)),
+          expr("interval 1 day")))))
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    def check(): Unit = {
+      shapes(graft.functions.BoundDate.of).zip(shapes(lit(_))).foreach { case (bound, literal) =>
+        val want = rows(literal)
+        assert(want.nonEmpty)
+        assert(rows(bound) === want)
+      }
+      val scene = loopScene(dayD).copy(fromDate = from, toDate = to, numDays = n)
+      assert(rows(HotTopicsPipeline.windowCounts(loopClicks, scene)) === rows(loopClicks
+        .filter(col("date").between(date_sub(lit(from), n), lit(to)))
+        .withColumn("day", explode(sequence(greatest(col("date"), lit(from)),
+          least(date_add(col("date"), n), lit(to)), expr("interval 1 day"))))
+        .groupBy(col("day"), col("newsId")).agg(sum(col("count")).as("clicks"))))
+    }
+    check()
+    withConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(check())
+  }
+
+  test("a persisted day-D recommendAll serves day D's rebuild, never day D+1") {
+    def recs(day: Date): DataFrame =
+      RecommendPipeline.recommendAll(loopUserKw, loopNewsKw, loopClicks, loopScene(day), Some(2))
+    def hot(day: Date): DataFrame = HotTopicsPipeline.recommendAll(loopClicks, loopScene(day))
+    val cached = Seq(recs(dayD), hot(dayD)).map(_.persist(StorageLevel.MEMORY_ONLY))
+    try {
+      cached.foreach(df => assert(df.count() > 0))
+      assert(recs(dayD).storageLevel === StorageLevel.MEMORY_ONLY)
+      assert(hot(dayD).storageLevel === StorageLevel.MEMORY_ONLY)
+      assert(recs(dayD1).storageLevel === StorageLevel.NONE)
+      assert(hot(dayD1).storageLevel === StorageLevel.NONE)
+    } finally cached.foreach(_.unpersist(blocking = true))
   }
 
   // --- Keyword stages + precision eval.

@@ -1206,8 +1206,9 @@ def check_q22(con, sf_dir, spark_out):
                          "cosine", 6)
 
 
-def _rec_lists(con, sf_dir):
-    """q23/q46's all-days run: per (day, user) top-5 dot-scored news."""
+def _rec_lists(con, sf_dir, k=5):
+    """q23/q46's all-days run: per (day, user) top-k dot-scored news, ranked
+    score desc / newsId asc; k=None keeps every positive score (q220)."""
     news_kw, news_date, user_kw, ck = _tfidf_profiles(con, sf_dir)
     ckd = ck.copy()
     ckd["date"] = pd.to_datetime(ckd["date"])
@@ -1228,14 +1229,14 @@ def _rec_lists(con, sf_dir):
             day += pd.Timedelta(days=1)
     lists = {}
     for (day, u), lst in per_day_user.items():
-        top = sorted(lst, key=lambda t: (-t[0], t[1]))[:5]
+        top = sorted(lst, key=lambda t: (-t[0], t[1]))[:k]
         lists[(day, u)] = [d for _, d in top]
     return lists, ckd
 
 
-def check_q23(con, sf_dir, spark_out):
-    lists, _ = _rec_lists(con, sf_dir)
-    got = dump(spark_out, "q23_rec_lists")
+def _rec_lists_errs(lists, got):
+    """Compare {(day, user): [newsIds]} with a (userId, date, news) dump
+    whose news is the comma-joined ranked list."""
     got["date"] = pd.to_datetime(got["date"])
     got = got.set_index(["userId", "date"])
     errs = []
@@ -1249,6 +1250,17 @@ def check_q23(con, sf_dir, spark_out):
     if bad:
         errs.append(f"{bad}/{len(lists)} rec lists differ")
     return errs
+
+
+def check_q23(con, sf_dir, spark_out):
+    lists, _ = _rec_lists(con, sf_dir)
+    return _rec_lists_errs(lists, dump(spark_out, "q23_rec_lists"))
+
+
+def check_q220(con, sf_dir, spark_out):
+    """T2: q23's scorer without the top-5 cut — every positive score."""
+    lists, _ = _rec_lists(con, sf_dir, k=None)
+    return _rec_lists_errs(lists, dump(spark_out, "q220_rec_unbounded"))
 
 
 def _precision_errs(recs, ckd, got):
@@ -1313,6 +1325,27 @@ def check_q19(con, sf_dir, spark_out):
             if int(row["newsId"]) != nid or int(row["clicks"]) != c:
                 errs.append(f"{day.date()} rn {rn}: ({row['newsId']},"
                             f"{row['clicks']}) != ({nid},{c})")
+    if len(got) != n:
+        errs.append(f"row count {len(got)} != {n}")
+    return errs
+
+
+def check_q47(con, sf_dir, spark_out):
+    """q19's ranking through the TopK aggregator: (day, newsId, rn) only."""
+    top, _ = _hot_topics(con, sf_dir)
+    got = dump(spark_out, "q47_hot_topics_agg")
+    got["day"] = pd.to_datetime(got["day"])
+    got = got.set_index(["day", "rn"])
+    errs = []
+    n = 0
+    for day, lst in top.items():
+        for rn, (_, nid) in enumerate(lst, 1):
+            n += 1
+            if (day, rn) not in got.index:
+                errs.append(f"{day.date()} rn {rn}: missing")
+            elif int(got.loc[(day, rn), "newsId"]) != nid:
+                errs.append(f"{day.date()} rn {rn}: "
+                            f"{got.loc[(day, rn), 'newsId']} != {nid}")
     if len(got) != n:
         errs.append(f"row count {len(got)} != {n}")
     return errs
@@ -6760,7 +6793,9 @@ CHECKS = {
     "q21_rec_dot": check_q21,
     "q22_rec_cosine": check_q22,
     "q23_rec_lists": check_q23,
+    "q220_rec_unbounded": check_q220,
     "q24_precision_hot": check_q24,
+    "q47_hot_topics_agg": check_q47,
     "q25_minhash_sig": check_q25,
     "q26_lsh_pairs": check_q26,
     "q279_minhash_estimate": check_q279_minhash_estimate,
