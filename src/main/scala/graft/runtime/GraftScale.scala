@@ -12,8 +12,10 @@ package graft.runtime
   * partitions are sized to executor memory at the actual data scale, not
   * pinned to one number for every workload.
   *
-  * One knob is not scale-adaptive: the size of Spark's generated-code cache
-  * ([[CodegenCacheEntries]]), which [[configure]] publishes for every run.
+  * Two settings are not scale-adaptive, and [[configure]] publishes them for
+  * every run: the size of Spark's generated-code cache
+  * ([[CodegenCacheEntries]]) and the fork-free local file system
+  * ([[graft.io.ForkFreeLocalFs.bindings]]).
   */
 object GraftScale {
 
@@ -49,18 +51,20 @@ object GraftScale {
 
   /** Returns whether `sfDir` is a large run and publishes
     * `graft.stage.ser` so [[Stage]] caches pick the serialized level.
-    * Also sizes the generated-code cache to [[CodegenCacheEntries]] unless
-    * the JVM already carries an explicit [[CodegenCacheKey]] (a `-D`
-    * value, which wins). The cache is a static conf read once per JVM when
-    * Spark's code generator first loads, and a new `SparkConf` picks up
-    * `spark.*` system properties, so call this before building the session
-    * and before any query builds a plan.
+    * Also sizes the generated-code cache to [[CodegenCacheEntries]] and
+    * binds the `file:` scheme to [[graft.io.ForkFreeLocalFs]], each unless
+    * the JVM already carries an explicit value for its key (a `-D` value,
+    * which wins). The cache is a static conf read once per JVM when Spark's
+    * code generator first loads, Hadoop caches a `file:` file system per
+    * JVM once one is built, and a new `SparkConf` picks up `spark.*` system
+    * properties, so call this before building the session and before any
+    * query builds a plan.
     */
   def configure(sfDir: String): Boolean = {
     val big = dirBytes(sfDir) >= LargeBytes
     System.setProperty("graft.stage.ser", big.toString)
-    if (!sys.props.contains(CodegenCacheKey))
-      System.setProperty(CodegenCacheKey, CodegenCacheEntries.toString)
+    ((CodegenCacheKey -> CodegenCacheEntries.toString) +: graft.io.ForkFreeLocalFs.bindings)
+      .foreach { case (k, v) => if (!sys.props.contains(k)) System.setProperty(k, v) }
     big
   }
 }

@@ -12,8 +12,9 @@ import java.nio.file.Files
   * ADVICE-hardened path for entry points that never call configure) is
   * pinned indirectly: Stage.cacheLevel is private, so the spec pins the
   * property VALUES configure publishes, which are the only inputs to it.
-  * The same goes for the generated-code cache size: Spark reads it once
-  * per JVM, so the spec pins the system property configure sets.
+  * The same goes for the generated-code cache size and the `file:`
+  * bindings: Spark reads them once per JVM (Hadoop caches the file system),
+  * so the spec pins the system properties configure sets.
   */
 class GraftScaleSpec extends AnyFunSuite {
 
@@ -72,6 +73,22 @@ class GraftScaleSpec extends AnyFunSuite {
       GraftScale.configure(dir)
       assert(sys.props.get(key) === Some("37"))
     })
+  }
+
+  test("configure: binds the fork-free file: file system when unset, keeps an explicit value") {
+    val bindings = graft.io.ForkFreeLocalFs.bindings
+    val Seq(fsKey, afsKey) = bindings.map(_._1)
+    assert(fsKey === "spark.hadoop.fs.file.impl")
+    assert(afsKey === "spark.hadoop.fs.AbstractFileSystem.file.impl")
+    withRestoredProp("graft.stage.ser")(withRestoredProp(fsKey)(withRestoredProp(afsKey) {
+      val dir = Files.createTempDirectory("gs-localfs").toFile.getPath
+      Seq(fsKey, afsKey).foreach(System.clearProperty)
+      GraftScale.configure(dir)
+      bindings.foreach { case (k, v) => assert(sys.props.get(k) === Some(v)) }
+      Seq(fsKey, afsKey).foreach(System.setProperty(_, "org.example.Explicit"))
+      GraftScale.configure(dir)
+      Seq(fsKey, afsKey).foreach(k => assert(sys.props.get(k) === Some("org.example.Explicit")))
+    }))
   }
 
   test("Stage.shared memoizes per key and rebuilds after evictSession") {

@@ -390,6 +390,58 @@ class PlanAndStreamSpec extends AnyFunSuite {
     assert(spark.read.parquet(outDir).count() === expected.size.toLong)
   }
 
+  test("q36 hot-key windows stopped at a batch boundary resume from checkpoint: the idempotent parquet sink equals the uninterrupted run, no window key twice") {
+    import java.sql.Timestamp
+    val base = java.nio.file.Files.createTempDirectory("graft_q36_restart").toString
+    // one file of clicks keyed by news id per day; each day's rows close
+    // the day before it (1-day windows, 1 h watermark), day 4 stays open
+    def day(d: Int) = (0 until 48).map(i =>
+      ((i * 7 + d) % 5L, Timestamp.valueOf(f"2024-01-$d%02d ${i / 2}%02d:${i % 2 * 30}%02d:00")))
+      .toDF("newsId", "ts").coalesce(1)
+    def land(src: String, days: Range): Unit =
+      days.foreach(d => day(d).write.mode("append").parquet(src))
+    val schema = day(1).schema
+    // the click_stream q36 shape: HotKeyDetector.windowCounts, append mode,
+    // ForeachBatchSink.idempotentParquet, one file per micro-batch
+    def start(src: String, run: String) =
+      graft.streaming.HotKeyDetector.windowCounts(
+          spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src),
+          "newsId", "ts", "1 day", "1 hour")
+        .writeStream.outputMode("append")
+        .foreachBatch(graft.streaming.ForeachBatchSink.idempotentParquet(s"$run/sink") _)
+        .option("checkpointLocation", s"$run/ckpt")
+        .start()
+    def drain(src: String, run: String): Unit = {
+      val q = start(src, run)
+      try q.processAllAvailable() finally q.stop()
+    }
+    def sink(run: String) = spark.read.parquet(s"$run/sink")
+      .select($"w_start", $"key", $"n").collect()
+      .map(r => (r.getTimestamp(0).toString, r.getLong(1), r.getLong(2))).toSeq.sorted
+
+    land(s"$base/src_once", 1 to 4)
+    drain(s"$base/src_once", s"$base/once")
+
+    // run 1 drains two days and stops between batches; the last batch's
+    // commit-log entry is then dropped, as a kill between the sink write and
+    // the commit leaves it, so run 2 replays that batch id before the rest
+    land(s"$base/src", 1 to 2)
+    drain(s"$base/src", s"$base/restart")
+    val commits = new java.io.File(s"$base/restart/ckpt/commits")
+    val last = commits.listFiles().map(_.getName).filter(_.forall(_.isDigit)).map(_.toLong).max
+    Seq(s"$last", s".$last.crc").foreach(n => new java.io.File(commits, n).delete())
+    land(s"$base/src", 3 to 4)
+    drain(s"$base/src", s"$base/restart")
+
+    val once = sink(s"$base/once")
+    assert(once.map(_._1.take(10)).distinct === Seq("2024-01-01", "2024-01-02", "2024-01-03"))
+    assert(once.map(_._3).sum === 3L * 48)
+    assert(sink(s"$base/restart") === once)
+    // exactly once: no (window, key) landed in two batches
+    val keys = spark.read.parquet(s"$base/restart/sink").select($"w_start", $"key")
+    assert(keys.count() === keys.distinct().count())
+  }
+
   test("flatMapGroupsWithState cumulative counts carry state across day-aligned batches") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
