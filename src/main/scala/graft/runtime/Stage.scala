@@ -224,7 +224,9 @@ object Stage {
     }
     val dir = s"$base/cut-${cutCounter.incrementAndGet()}"
     df.write.mode("overwrite").parquet(dir)
-    spark.read.parquet(dir)
+    // the written frame's schema: inferring it would run a one-task job to
+    // read a footer back
+    spark.read.schema(df.schema).parquet(dir)
   }
 
   private val cutCounter = new java.util.concurrent.atomic.AtomicLong(0)

@@ -2,7 +2,7 @@ package graft
 
 import graft.ext.Ann
 import graft.queries.RelationalQueries
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -375,7 +375,7 @@ class PlanAndStreamSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // batch oracle: the same theta join over the union of all slices
     val all = (sliceA ++ sliceB ++ sliceC).toDF(cols: _*)
-    val expected = graft.streaming.StreamingIntervalJoin.join(
+    val expected = IntervalJoinReference.join(
         all.filter($"event_type" === "view")
           .select($"user_id".as("v_user"), $"event_id".as("view_id"), $"ts".as("v_ts")),
         all.filter($"event_type" === "click")
@@ -388,6 +388,39 @@ class PlanAndStreamSpec extends AnyFunSuite {
     assert(out.contains((1L, 100L, 201L)) && out.contains((3L, 102L, 203L)))
     // exactly-once across the restart: no pair emitted twice
     assert(spark.read.parquet(outDir).count() === expected.size.toLong)
+  }
+
+  test("a symmetric-join checkpoint restarted under the keyed interval join fails with a state error, never resumes with empty buffers") {
+    import java.sql.Timestamp
+    val base = java.nio.file.Files.createTempDirectory("graft_ij_ckpt_compat").toString
+    val srcDir = s"$base/src"
+    def t(min: Int) = Timestamp.valueOf(f"2024-03-01 10:$min%02d:00")
+    val cols = Seq("user_id", "event_id", "event_type", "ts")
+    Seq((1L, 100L, "view", t(0)), (2L, 200L, "click", t(20))).toDF(cols: _*)
+      .coalesce(1).write.parquet(srcDir)
+    val schema = spark.read.parquet(srcDir).schema
+    def run(join: (DataFrame, DataFrame) => DataFrame): Unit = {
+      val (views, clicks) = ijLegs(spark.readStream.schema(schema).parquet(srcDir))
+      val q = join(views, clicks).select($"c_user", $"view_id", $"click_id")
+        .writeStream.outputMode("append").format("parquet")
+        .option("path", s"$base/out").option("checkpointLocation", s"$base/ckpt")
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    // the q66 shape under the relational form, which buffers view 100
+    run(IntervalJoinReference.join)
+    // a click that joins view 100 only if its buffered state came back
+    Seq((1L, 201L, "click", t(30))).toDF(cols: _*).coalesce(1).write.mode("append")
+      .parquet(srcDir)
+    // Spark's operator-metadata check refuses the changed stateful operator
+    // at the restart's first batch
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      run(graft.streaming.StreamingIntervalJoin.join))
+    assert(e.getMessage.contains("STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA"),
+      e.getMessage)
+    assert(spark.streams.active.isEmpty)
+    // the refused batch landed nothing (the first run had no pair to write)
+    assert(spark.read.parquet(s"$base/out").count() === 0L)
   }
 
   test("q36 hot-key windows stopped at a batch boundary resume from checkpoint: the idempotent parquet sink equals the uninterrupted run, no window key twice") {
@@ -506,12 +539,149 @@ class PlanAndStreamSpec extends AnyFunSuite {
     // joined columns: (c_user, click_id, c_ts, v_user, view_id, v_ts)
     def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1), r.getLong(4))
     val streamed = spark.table("stream_ij_test").collect().map(key).sorted.toSeq
-    val batch = graft.streaming.StreamingIntervalJoin.join(
+    val batch = IntervalJoinReference.join(
         viewRows.toSeq.toDF("v_user", "view_id", "v_ts"),
         clickRows.toSeq.toDF("c_user", "click_id", "c_ts"))
       .collect().map(key).sorted.toSeq
     assert(streamed === batch)
     assert(streamed.nonEmpty)
+  }
+
+  /** Events (user_id, event_id, event_type, ts) as the interval join's two
+    * legs, 2 h watermarks. Rows after `until` only move the watermark: they
+    * are dropped above the watermark node (a filter on the event-time
+    * column is not pushed below it) and never reach the join.
+    */
+  private def ijLegs(events: DataFrame, until: Option[java.sql.Timestamp] = None)
+      : (DataFrame, DataFrame) = {
+    def leg(kind: String, p: String, id: String) = {
+      val l = events.filter($"event_type" === kind)
+        .select($"user_id".as(s"${p}_user"), $"event_id".as(id), $"ts".as(s"${p}_ts"))
+        .withWatermark(s"${p}_ts", "2 hours")
+      until.fold(l)(u => l.filter(col(s"${p}_ts") <= lit(u)))
+    }
+    (leg("view", "v", "view_id"), leg("click", "c", "click_id"))
+  }
+
+  private type Ev = (Long, Long, String, java.sql.Timestamp)
+  private val ijT0 = java.sql.Timestamp.valueOf("2024-03-01 00:00:00").getTime * 1000L
+  private val ijMin = 60L * 1000000L
+  private def ijAt(us: Long): java.sql.Timestamp = {
+    val t = new java.sql.Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
+    t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
+    t
+  }
+  private def ijView(u: Long, id: Long, us: Long): Ev = (u, id, "view", ijAt(ijT0 + us))
+  private def ijClick(u: Long, id: Long, us: Long): Ev = (u, id, "click", ijAt(ijT0 + us))
+
+  /** Feeds `batches` one micro-batch each through `join` over its own
+    * MemoryStream into a memory sink; returns the sink's rows as
+    * (c_user, click_id, c_ts µs, v_user, view_id, v_ts µs), sorted, and the
+    * query's progress. After batch i is processed, `after(q, i)` runs.
+    */
+  private def ijRun(name: String, batches: Seq[Seq[Ev]],
+                    join: (DataFrame, DataFrame) => DataFrame,
+                    after: (org.apache.spark.sql.streaming.StreamingQuery, Int) => Unit =
+                      (_, _) => (),
+                    until: Option[java.sql.Timestamp] = None)
+      : (Seq[(Long, Long, Long, Long, Long, Long)],
+         Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val stream = MemoryStream[Ev]
+    val (views, clicks) =
+      ijLegs(stream.toDF().toDF("user_id", "event_id", "event_type", "ts"), until)
+    val q = join(views, clicks)
+      .select($"c_user", $"click_id", unix_micros($"c_ts"), $"v_user", $"view_id",
+        unix_micros($"v_ts"))
+      .writeStream.outputMode("append").format("memory").queryName(name).start()
+    try batches.zipWithIndex.foreach { case (b, i) =>
+      stream.addData(b)
+      q.processAllAvailable()
+      after(q, i)
+    } finally q.stop()
+    val rows = spark.table(name).collect().map(r =>
+      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
+    (rows.toSeq.sorted, q.recentProgress.toSeq)
+  }
+
+  /** State rows after the last micro-batch `q` ran at watermark `wmUs`. A
+    * data batch's eviction runs in the no-data batch after it, which
+    * `processAllAvailable` waits for.
+    */
+  private def ijStateRowsAt(q: org.apache.spark.sql.streaming.StreamingQuery, wmUs: Long): Long = {
+    val at = q.recentProgress.filter(p => Option(p.eventTime.get("watermark"))
+      .exists(w => java.time.Instant.parse(w).toEpochMilli * 1000L == wmUs))
+    assert(at.nonEmpty, s"no micro-batch ran at watermark ${ijAt(wmUs)}")
+    at.last.stateOperators.head.numRowsTotal
+  }
+
+  test("keyed interval join equals Spark's symmetric hash join on multi-batch input: closed 0 and 1 h bounds, users across batches, late rows dropped") {
+    val h = 60 * ijMin
+    val batches = Seq(
+      // gap 0 (1/20 on view 10), exactly 1 h (2/21), 1 h + 1 µs (3/22:
+      // no pair), exactly 1 h at µs offsets (6/27); user 1 holds three
+      // views, user 4's view waits for a click in the next batch
+      Seq(ijView(1, 10, 0), ijView(1, 11, 10 * ijMin), ijView(1, 12, 20 * ijMin),
+        ijClick(1, 20, 0), ijView(2, 13, 5 * ijMin), ijClick(2, 21, 65 * ijMin),
+        ijView(3, 14, 10 * ijMin), ijClick(3, 22, 70 * ijMin + 1),
+        ijView(4, 15, 30 * ijMin), ijView(6, 18, 7), ijClick(6, 27, h + 7)),
+      // buffered views meet new clicks: 4/23 at exactly 1 h, 1/24 on all
+      // three of user 1's views; user 8's click 40 expires before view 30
+      Seq(ijClick(4, 23, 90 * ijMin), ijClick(1, 24, 25 * ijMin), ijView(9, 16, 6 * h),
+        ijView(8, 30, 3 * h + 30 * ijMin), ijClick(8, 40, 3 * h + 50 * ijMin)),
+      // user 9's click joins its buffered view (9/26); with both legs past
+      // 6 h the watermark (the smaller leg's) reaches 4 h, which times
+      // user 8 out on click 40 while view 30 (3 h 30 min) must stay
+      Seq(ijClick(9, 26, 6 * h + 30 * ijMin)),
+      // late: user 5's pair at 1 h sits below that watermark on both
+      // sides; user 7's pair is on time, and user 8's click 41 joins the
+      // view buffered past the watermark
+      Seq(ijView(5, 17, h), ijClick(5, 25, h + ijMin),
+        ijView(7, 19, 6 * h + 40 * ijMin), ijClick(7, 28, 7 * h),
+        ijClick(8, 41, 4 * h + 15 * ijMin)))
+    val (keyed, keyedProgress) = ijRun("ij_keyed_diff", batches,
+      graft.streaming.StreamingIntervalJoin.join)
+    val (symmetric, symmetricProgress) = ijRun("ij_symmetric_diff", batches,
+      IntervalJoinReference.join)
+    assert(keyed === symmetric)
+    assert(keyed.map(r => (r._2, r._5)).sorted === Seq((20L, 10L), (21L, 13L), (23L, 15L),
+      (24L, 10L), (24L, 11L), (24L, 12L), (26L, 16L), (27L, 18L), (28L, 19L),
+      (40L, 30L), (41L, 30L)))
+    // µs-exact event times on the way out
+    assert(keyed.find(_._2 == 27L).map(r => (r._3, r._6)) ===
+      Some((ijT0 + h + 7, ijT0 + 7)))
+    // the late pair would join in a batch join over the same rows
+    val (bv, bc) = ijLegs(batches.flatten.toDF("user_id", "event_id", "event_type", "ts"))
+    assert(IntervalJoinReference.join(bv, bc).filter($"click_id" === 25L).count() === 1L)
+    // one state operator with one store per partition, against the
+    // symmetric join's four
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    assert(keyedProgress.last.stateOperators.map(_.numStateStoreInstances).toSeq ===
+      Seq(partitions))
+    assert(symmetricProgress.last.stateOperators.map(_.numStateStoreInstances).sum ===
+      4 * partitions)
+  }
+
+  test("keyed interval join state is bounded: a user's state row goes once the watermark passes their last click and last view + 1 h") {
+    val h = 60 * ijMin
+    val batches = Seq(
+      // user 1's state expires at 1 h 20 min (view at 20 min + 1 h), user
+      // 2's at 4 h
+      Seq(ijView(1, 10, 20 * ijMin), ijClick(1, 20, 25 * ijMin),
+        ijView(2, 11, 3 * h), ijClick(2, 21, 3 * h)),
+      // watermark rows only (past 3 h), on both legs: the watermark is the
+      // smaller leg's
+      Seq(ijView(3, 12, 3 * h + 30 * ijMin), ijClick(3, 22, 3 * h + 30 * ijMin)),
+      Seq(ijView(3, 13, 10 * h), ijClick(3, 23, 10 * h)))
+    // watermark after each batch: 1 h, 1 h 30 min, 8 h
+    val wms = Seq(h, h + 30 * ijMin, 8 * h).map(ijT0 + _)
+    var stateRows = Seq.empty[Long]
+    val (rows, _) = ijRun("ij_keyed_state", batches, graft.streaming.StreamingIntervalJoin.join,
+      after = (q, i) => stateRows :+= ijStateRowsAt(q, wms(i)), until = Some(ijAt(ijT0 + 3 * h)))
+    assert(rows.map(r => (r._2, r._5)) === Seq((20L, 10L), (21L, 11L)))
+    assert(stateRows === Seq(2L, 1L, 0L))
+    assert(spark.streams.active.isEmpty)
   }
 
   test("TWS timers: a user's timer firing mid-stream still merges to the full summary") {

@@ -177,4 +177,32 @@ class PlansSpec extends AnyFunSuite {
     assert(!phys.contains("SortMergeJoin"),
       "no SortMergeJoin may appear above a megabyte-scale cut stage")
   }
+
+  test("sharedCut reads its parquet back with the written schema: no schema-inference job") {
+    val df = (1L to 100L).map(i => (i, s"w$i", java.sql.Timestamp.valueOf("2024-03-01 10:00:00")))
+      .toDF("id", "word", "ts")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    def jobsOf(body: => Unit): Int = {
+      org.apache.spark.graft.TestBridge.waitForListenerBus(spark.sparkContext, 30000L)
+      jobs.set(0)
+      body
+      org.apache.spark.graft.TestBridge.waitForListenerBus(spark.sparkContext, 30000L)
+      jobs.get
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val dir = java.nio.file.Files.createTempDirectory("graft_cut_jobs").toString
+      val writeJobs = jobsOf(df.write.mode("overwrite").parquet(dir))
+      var cut: org.apache.spark.sql.DataFrame = null
+      // the cut is the write alone: reading back starts no job
+      assert(jobsOf { cut = graft.runtime.Stage.sharedCut(df) } === writeJobs)
+      assert(cut.schema.map(f => (f.name, f.dataType)) === df.schema.map(f => (f.name, f.dataType)))
+      assert(cut.orderBy("id").collect().toSeq === df.orderBy("id").collect().toSeq)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }
