@@ -50,13 +50,7 @@ object ParityQueries {
     // oracle expects to be uniformly true. This puts the write→read-back
     // loop inside the driver gate instead of IoSpec only.
     "q219_doc_roundtrip" -> ((s, d) => {
-      // Directory key = SHA-256 of the full dataset path (32-bit hashCode
-      // collides across paths) + this JVM's pid (concurrent runs on the SAME
-      // dataset must not race a shared parquet write). Names only isolate the
-      // round-trip location; results are path-independent.
-      val pathDigest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-      val base = s"/tmp/graft_docs_rt_${pathDigest}_p${ProcessHandle.current().pid()}"
+      val base = graft.runtime.Scratch.dir("docs_rt", d)
       val docs = ExtQueries.docKeywords(s, d).filter(col("rn") <= 3)
         .groupBy(col("id"))
         .agg(transform(

@@ -30,6 +30,9 @@ import scala.collection.mutable
   *    query's intermediates in the block manager and spends its time in GC
   *    and eviction instead of work.
   *
+  * Files: the [[sharedCut]] parquet lives in a [[Scratch]] directory; where
+  * scratch goes and when it is reclaimed is decided there, not here.
+  *
   * Queries run sequentially under the driver contract (Verify/Bench), so a
   * coarse lock is enough.
   */
@@ -170,113 +173,19 @@ object Stage {
     * profiles written to files once and re-read by every consumer
     * (/root/reference/TF_IDF.java:109,127).
     *
-    * Location: `SPARK_GRAFT_CHECKPOINT_DIR` (the deployment's durable
-    * scratch — same switch [[Reroot]] uses) when set, else a per-session
-    * java.io.tmpdir directory. Cut files are application-lifetime scratch
-    * in EITHER location (unlike [[Reroot.Reliable]] checkpoints they are
-    * never recovery state), so the per-JVM base is deleted when the
-    * application ends — via the Hadoop FileSystem API, which covers the
-    * durable branch on HDFS/object stores as well as local tmpdir.
+    * Location: a fresh [[Scratch]] directory per cut,
+    * `graft_cut_<jvmTag>_n<k>` under java.io.tmpdir, under the same rules
+    * as all other engine scratch: the per-JVM token, the heartbeat, the
+    * first-use sweep of dead JVMs' leaks and the exit-time delete. Cut
+    * files are never recovery state, so `SPARK_GRAFT_CHECKPOINT_DIR` (the
+    * [[Reroot.Reliable]] checkpoint dir) does not move them.
     */
   def sharedCut(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    // jvmId in every path: session tags and cut numbers restart per JVM,
-    // so two concurrent graft processes on one host (or sharing the
-    // durable scratch dir) would otherwise write — and at application end
-    // DELETE — each other's cut directories.
-    val base = sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
-      .map(d => s"$d/graft-$jvmId")
-      .getOrElse(s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft-shared-$jvmId-${sessionTag(spark)}")
-    synchronized {
-      if (!scratchHooked.contains(base)) {
-        scratchHooked += base
-        // Capture the Hadoop conf now — at onApplicationEnd the context is
-        // mid-shutdown and its accessors are not guaranteed.
-        val hconf = spark.sparkContext.hadoopConfiguration
-        // The exit listener can't run on SIGKILL/crash, and in the durable
-        // branch the random jvmId means a later run never re-derives a dead
-        // run's path — so leaked cut dirs would accumulate forever. Reclaim
-        // day-old graft-* siblings (other jvmIds) here at first use — but
-        // only those with NO live `_heartbeat` marker: base-dir mtime stops
-        // advancing once a run is only reading its cuts, so a >24 h
-        // concurrent run would otherwise look stale to a newly started JVM
-        // (VERDICT r8). Our own base gets a heartbeat touched every
-        // Heartbeat.TouchMs by a daemon timer.
-        try {
-          val basePath = new org.apache.hadoop.fs.Path(base)
-          val fs = basePath.getFileSystem(hconf)
-          Heartbeat.ensureKeyed(base)(touchHeartbeat(fs, basePath))
-          sweepStaleCuts(fs, basePath.getParent, jvmId,
-            System.currentTimeMillis())
-        } catch { case ex: java.io.IOException => System.err.println(
-          s"[stage] stale scratch sweep failed under $base: $ex") }
-        spark.sparkContext.addSparkListener(new SparkListener {
-          override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
-            Heartbeat.cancel(base)
-            val p = new org.apache.hadoop.fs.Path(base)
-            try { p.getFileSystem(hconf).delete(p, true); () }
-            catch { case ex: java.io.IOException => System.err.println(
-              s"[stage] shared-cut scratch cleanup failed for $base: $ex") }
-          }
-        })
-      }
-    }
-    val dir = s"$base/cut-${cutCounter.incrementAndGet()}"
+    val dir = Scratch.fresh("cut")
     df.write.mode("overwrite").parquet(dir)
     // the written frame's schema: inferring it would run a one-task job to
     // read a footer back
-    spark.read.schema(df.schema).parquet(dir)
-  }
-
-  private val cutCounter = new java.util.concurrent.atomic.AtomicLong(0)
-  private val scratchHooked = mutable.Set[String]()
-  private val jvmId = java.util.UUID.randomUUID().toString.take(8)
-
-  /** Liveness marker name inside a cut base dir. */
-  private[runtime] val HeartbeatName = "_heartbeat"
-
-  /** Create-or-touch `base/_heartbeat`. Creating the marker also creates
-    * the base dir, which is harmless (cut writers mkdirs anyway) and gives
-    * the base a live veto from the first second of the run. The application-end
-    * listener cancels the timer BEFORE deleting the base, so the touch
-    * never recreates a cleaned-up dir.
-    */
-  private def touchHeartbeat(fs: org.apache.hadoop.fs.FileSystem,
-                             base: org.apache.hadoop.fs.Path): Unit = {
-    val hb = new org.apache.hadoop.fs.Path(base, HeartbeatName)
-    try {
-      if (!fs.exists(hb)) fs.create(hb, true).close()
-      else fs.setTimes(hb, System.currentTimeMillis(), -1)
-    } catch { case _: java.io.IOException => () }
-  }
-
-  /** Delete `graft-*` siblings of `parent` that are BOTH older than 24 h
-    * by mtime AND carry no heartbeat fresher than [[Heartbeat.FreshMs]].
-    * Factored out of [[sharedCut]] so IoSpec can drive it against a local
-    * Hadoop FileSystem without a SparkSession.
-    */
-  private[graft] def sweepStaleCuts(fs: org.apache.hadoop.fs.FileSystem,
-                                    parent: org.apache.hadoop.fs.Path,
-                                    liveId: String, now: Long): Unit = {
-    val cutoff = now - 24L * 3600 * 1000
-    if (parent != null && fs.exists(parent)) {
-      fs.listStatus(parent).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("graft-") && !n.contains(liveId)
-            && st.getModificationTime < cutoff) {
-          val hb = new org.apache.hadoop.fs.Path(st.getPath, HeartbeatName)
-          val live =
-            try fs.exists(hb) &&
-              Heartbeat.isLive(fs.getFileStatus(hb).getModificationTime, now)
-            catch { case _: java.io.IOException => true } // can't read ⇒ don't delete
-          if (!live) {
-            try { fs.delete(st.getPath, true); () }
-            catch { case _: java.io.IOException => () }
-          }
-        }
-      }
-    }
+    df.sparkSession.read.schema(df.schema).parquet(dir)
   }
 
   /** [[sharedCut]] + pinned parallelism + session-lifetime cache — the

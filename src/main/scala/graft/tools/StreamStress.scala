@@ -32,6 +32,9 @@ import org.apache.spark.sql.Row
   * parquet sink against the batch oracle (exceptAll both ways) and emits
   * one JSON line: per-phase wall seconds, micro-batch count, max state
   * rows/bytes from the progress stream, watermark advance, match verdict.
+  * Like every entry point it calls [[graft.runtime.GraftScale.configure]]
+  * before building its session; the skewed source, sinks and checkpoints
+  * live in a [[graft.runtime.Scratch]] dir deleted at exit.
   *
   * Usage: runMain graft.tools.StreamStress <sfDir> <outJsonPath> [mode]
   * mode = hotPct number (default 2; 0 = unskewed control), or
@@ -77,6 +80,7 @@ object StreamStress {
       case s => s.toInt
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    graft.runtime.GraftScale.configure(sfDir)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -86,7 +90,7 @@ object StreamStress {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val work = java.nio.file.Files.createTempDirectory("stream_stress").toString
+    val work = graft.runtime.Scratch.fresh("stream_stress")
     val skewDir = s"$work/events_skew"
 
     // --- skewed source: hotPct% of events re-keyed to the single hot user,

@@ -122,31 +122,31 @@ class IoSpec extends AnyFunSuite {
     }
   }
 
-  test("sharedCut sweep honors heartbeat liveness (VERDICT r8)") {
-    import org.apache.hadoop.fs.Path
-    val tmp = Files.createTempDirectory("graft-cutsweep").toFile
-    val fs = new Path(tmp.getAbsolutePath)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
-    val dayOld = System.currentTimeMillis() - 25L * 3600 * 1000
-    val liveBase = new java.io.File(tmp, "graft-aaaa1111")
-    val deadBase = new java.io.File(tmp, "graft-bbbb2222")
-    try {
-      Seq(liveBase, deadBase).foreach { d =>
-        new java.io.File(d, "cut-1").mkdirs()
-        Files.write(new java.io.File(d, "_heartbeat").toPath, "1".getBytes)
-        assert(d.setLastModified(dayOld))
-      }
-      // dead owner: heartbeat itself is 25h stale
-      assert(new java.io.File(deadBase, "_heartbeat").setLastModified(dayOld))
-      graft.runtime.Stage.sweepStaleCuts(fs,
-        new Path(tmp.getAbsolutePath), "cccc3333", System.currentTimeMillis())
-      assert(liveBase.exists(), "fresh heartbeat must veto the sweep")
-      assert(!deadBase.exists(), "stale heartbeat must not")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        val k = f.listFiles(); if (k != null) k.foreach(rm); f.delete(); ()
-      }
-      rm(tmp)
-    }
+  test("scratch location is read only in Scratch, the checkpoint dir only in Reroot") {
+    // one module per decision: where scratch lives (java.io.tmpdir, temp
+    // dirs) is Scratch's, what SPARK_GRAFT_CHECKPOINT_DIR governs is
+    // Reroot's. Comment lines may name them; code lines elsewhere may not.
+    import scala.jdk.CollectionConverters._
+    val src = new java.io.File("src/main/scala")
+    assert(src.isDirectory, s"no sources at ${src.getAbsolutePath}")
+    def scalaFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(scalaFiles)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val owners = Seq(
+      "java.io.tmpdir" -> "graft/runtime/Scratch.scala",
+      "createTempDirectory" -> "graft/runtime/Scratch.scala",
+      "SPARK_GRAFT_CHECKPOINT_DIR" -> "graft/runtime/Reroot.scala")
+    val files = scalaFiles(src)
+    assert(files.exists(_.getName == "Scratch.scala"))
+    val offenders = for {
+      f <- files
+      rel = src.toPath.relativize(f.toPath).toString
+      (line, i) <- Files.readAllLines(f.toPath).asScala.zipWithIndex
+      code = line.trim
+      if !(code.startsWith("*") || code.startsWith("/*") || code.startsWith("//"))
+      (needle, owner) <- owners
+      if rel != owner && code.contains(needle)
+    } yield s"$rel:${i + 1}: $needle outside $owner"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

@@ -205,4 +205,26 @@ class PlansSpec extends AnyFunSuite {
       assert(cut.orderBy("id").collect().toSeq === df.orderBy("id").collect().toSeq)
     } finally spark.sparkContext.removeSparkListener(l)
   }
+
+  test("sharedCut over a scoped input outlives the query scope and the scratch sweep") {
+    // the persistShared INVARIANT: a cut built over a scopedPersist input
+    // is self-contained data, so releasing the scope must not make its
+    // reads re-run the scoped source
+    val sourceRows = spark.sparkContext.longAccumulator("scoped_source_rows")
+    val tracked = udf { (i: Long) => sourceRows.add(1); i * 2 }
+    val scoped = graft.runtime.Stage.scopedPersist(
+      spark.range(1, 51).toDF("id").withColumn("v", tracked(col("id"))))
+    val cut = graft.runtime.Stage.sharedCut(scoped.filter(col("v") % 4 === 0))
+    val built = sourceRows.value
+    assert(built > 0)
+    graft.runtime.Stage.newQueryScope()
+    graft.runtime.Scratch.sweepForTest()
+    assert(cut.orderBy("id").collect().map(_.getLong(0)).toSeq === (2L to 50L by 2))
+    assert(sourceRows.value === built, "reading the cut re-ran the scoped source")
+    // its files sit in this JVM's scratch, under the cut's own dir
+    val files = cut.inputFiles
+    assert(files.nonEmpty)
+    val home = s"/graft_cut_${graft.runtime.Scratch.jvmTag}_n"
+    assert(files.forall(_.contains(home)), files.mkString(", "))
+  }
 }
