@@ -67,45 +67,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Scale-adaptive knobs (see GraftScale): only a large dataset gets the
-    // memory-pressure settings — an unconditional switch cost a broad
-    // ~1.3× at sf0.1, where the pressure they relieve doesn't exist.
-    val big = graft.runtime.GraftScale.configure(sfDir)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // r3 showed in-run timings up to 4x the standalone time for queries
-      // late in the sequence: dropped shuffle files / unpersisted blocks
-      // from earlier queries are only reclaimed when the driver GC runs
-      // the ContextCleaner. Default interval is 30 MINUTES — far longer
-      // than a whole bench run, so pressure accumulates. r3 fixed that
-      // with a 30s sweep; r13 found the sweep's System.gc() is a 3-12 s
-      // stop-the-world pause that lands INSIDE whatever lane is running
-      // (q220 samples [3.96..12.6] with the sweep vs [3.18..1.84] without,
-      // same code). r14: the sweep is driven from the bench loop itself,
-      // BETWEEN lanes and outside every timed region, on a WALL-CLOCK
-      // cadence (below) — the 30s timer is no longer needed as the primary
-      // cleaner pacing and stays only as a long-stop fallback, env-tunable.
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "30min"))
-    if (big) {
-      // Let AQE size shuffles from runtime stats: big stages START at 8×
-      // cores so no single sort partition holds tens of millions of rows
-      // (the sf1 rec-lane windows OOM'd a 32-partition layout on an 8 GB
-      // heap), while coalescing shrinks small stages back to ~cores. This
-      // is the local-mode rendering of "partitions sized to fit executor
-      // memory at the target SF" — on a real cluster the same conf scales
-      // with the executor count.
-      builder.config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.runtime.GraftScale.session(sfDir, cpus)
     // JVM/codegen/parquet-reader warmup so the first timed query doesn't
     // absorb one-time initialization (no query data is cached by this).
     spark.range(1000).selectExpr("sum(id)").collect()

@@ -1,6 +1,8 @@
 package graft.runtime
 
-/** Scale-adaptive harness knobs.
+import org.apache.spark.sql.SparkSession
+
+/** Scale-adaptive harness knobs, and the one session builder.
   *
   * The settings that save a large-SF run in one local JVM — fine-grained
   * initial shuffle partitions so no single sort partition outgrows the
@@ -16,6 +18,11 @@ package graft.runtime
   * every run: the size of Spark's generated-code cache
   * ([[CodegenCacheEntries]]) and the fork-free local file system
   * ([[graft.io.ForkFreeLocalFs.bindings]]).
+  *
+  * [[session]] calls [[configure]] and builds the session for every entry
+  * point (Bench, Verify, DumpAux, PlanDigest, ScalePins, ScaleUp,
+  * StreamStress) and for the test suites. `perfbench.Main` calls
+  * [[configure]] and builds its own session.
   */
 object GraftScale {
 
@@ -66,5 +73,32 @@ object GraftScale {
     ((CodegenCacheKey -> CodegenCacheEntries.toString) +: graft.io.ForkFreeLocalFs.bindings)
       .foreach { case (k, v) => if (!sys.props.contains(k)) System.setProperty(k, v) }
     big
+  }
+
+  /** Configures the JVM for `sfDir` and returns the `local[cpus]` session:
+    * `cpus` shuffle partitions, UTC, nanos-as-long parquet timestamps (the
+    * legacy events layout), AQE on, UI off, log level WARN. A large dataset
+    * also starts big shuffles at 8× cores and lets AQE coalesce small
+    * stages back to ~cores, so no single sort partition holds tens of
+    * millions of rows (the sf1 rec-lane windows OOM'd a 32-partition layout
+    * on an 8 GB heap). That is the local-mode rendering of "partitions
+    * sized to fit executor memory at the target SF"; on a cluster the same
+    * conf scales with the executor count.
+    */
+  def session(sfDir: String, cpus: Int): SparkSession = {
+    val big = configure(sfDir)
+    val builder = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+    if (big)
+      builder.config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+        (cpus * 8).toString)
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

@@ -122,9 +122,11 @@ object Stage {
     * multi-tenant cluster deployment uses for long-lived shared caches.
     * Deserialized for small runs: at bench SF the caches are KBs–MBs and
     * the per-read deserialization is pure overhead (an unconditional SER
-    * switch cost a broad ~1.3× at sf0.1). Bench, Verify, PlanDigest,
-    * ScalePins, DumpAux and perfbench set the property from the dataset's
-    * on-disk size (see `GraftScale.configure`).
+    * switch cost a broad ~1.3× at sf0.1). Every entry point (Bench,
+    * Verify, DumpAux, PlanDigest, ScalePins, ScaleUp and StreamStress
+    * through `GraftScale.session`, perfbench directly) and the test suites
+    * set the property from the dataset's on-disk size (see
+    * `GraftScale.configure`).
     *
     * When the property is ABSENT (an entry point that never called
     * `GraftScale.configure`), default to SER: the failure mode of a wrong

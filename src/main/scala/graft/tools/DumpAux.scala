@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump the raw (non-oracle-able) faces of the two audit lanes for their
   * out-of-band verifiers — since r9 the DECLARED q50/q74 lanes emit
   * bound-verdict booleans (driver-green), so the raw ALS rec lists and raw
@@ -15,16 +13,8 @@ import org.apache.spark.sql.SparkSession
 object DumpAux {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    graft.runtime.GraftScale.configure(sfDir)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.runtime.GraftScale.session(sfDir, cpus)
     import org.apache.spark.sql.functions._
     graft.pipelines.AlsRecommender.recommend(graft.io.Tables.clicks(spark, sfDir), k = 5)
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/als_lists")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Verify.{jsonString => jq}
 import java.nio.file.{Files, Paths}
 
 /** Physical-plan regression pins (VERDICT r7 task 7): for every declared
@@ -15,14 +15,16 @@ import java.nio.file.{Files, Paths}
   * SHA-256 of that canonical text; the full canonical text ships next to it
   * so a digest diff is immediately inspectable (`tools/plans_diff.py`).
   *
-  * Known residual flake: AQE's build-side choice on a SYMMETRIC self-join
-  * (q70/q98's LSH candidate join — both sides the same cached relation)
-  * ties on runtime stats and can flip BuildLeft↔BuildRight between runs,
-  * moving the BroadcastExchange to the other child. Not normalized away:
-  * on asymmetric joins the build side is a real regression signal, and
-  * forcing a broadcast hint in the dedup code would pin a choice that is
-  * only correct at tiny SF (at scale that join is sort-merge). Treat a
-  * q70/q98-only build-side diff as noise.
+  * Known residual flakes: AQE's build-side choice on a SYMMETRIC self-join
+  * (q274's LSH band self-join — both sides the same cached relation) ties
+  * on runtime stats and can flip BuildLeft↔BuildRight between runs,
+  * moving the BroadcastExchange to the other child; q288's AQE exchanges
+  * flip the same way. Both depend on what earlier lanes in the same JVM
+  * materialized (q274 digested alone gives a third digest). Not
+  * normalized away: on asymmetric joins the build side is a real
+  * regression signal, and forcing a broadcast hint in the dedup code would
+  * pin a choice that is only correct at tiny SF (at scale that join is
+  * sort-merge). Treat a q274/q288-only diff as noise.
   *
   * Run at sf0.001 (plans are pinned for their SHAPE — strategies chosen
   * from static estimates — and queries whose construction executes work,
@@ -126,24 +128,8 @@ object PlanDigest {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outPath = if (args.length > 1) args(1) else "bench/plans.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    graft.runtime.GraftScale.configure(sfDir)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def jq(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.runtime.GraftScale.session(sfDir, cpus)
 
     val entries = SparkEntryRef.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       try {

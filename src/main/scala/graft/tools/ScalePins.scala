@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.Verify.{jsonString => jq}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** sf1-scale plan pins for the rec family.
@@ -118,31 +118,10 @@ object ScalePins {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/tmp/sf1"
     val outPath = if (args.length > 1) args(1) else "bench/plans_sf1.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val big = graft.runtime.GraftScale.configure(sfDir)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "30s")
-    if (big) {
-      builder.config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.runtime.GraftScale.session(sfDir, cpus)
     val tally = new StageTally
     spark.sparkContext.addSparkListener(tally)
-
-    def jq(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
     // Lane exclusion for the stress tiers (e.g. q23's exact all-days lane
     // at sf10 is an ~80-minute single run whose join SHAPE is already

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Stress-data generator: replicates the driver's sf0.1 tables `factor`×
@@ -46,15 +46,8 @@ object ScaleUp {
     val mode = if (args.length > 3) args(3) else "exact"
     require(mode == "exact" || mode == "neardup",
       s"ScaleUp: unknown mode '$mode' (expected exact|neardup)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = graft.runtime.GraftScale.session(src, cpus)
 
     def t(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
 

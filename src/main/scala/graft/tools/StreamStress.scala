@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
@@ -79,16 +79,8 @@ object StreamStress {
       case "multi" | "rotate" => 2
       case s => s.toInt
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    graft.runtime.GraftScale.configure(sfDir)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
+    val spark = graft.runtime.GraftScale.session(sfDir, cpus)
 
     val work = graft.runtime.Scratch.fresh("stream_stress")
     val skewDir = s"$work/events_skew"

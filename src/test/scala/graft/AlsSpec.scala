@@ -1,18 +1,10 @@
 package graft
 
 import graft.pipelines.AlsRecommender
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Date
 
-class AlsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AlsSpec extends AnyFunSuite with SparkSuite {
 
   import spark.implicits._
 

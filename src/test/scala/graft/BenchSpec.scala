@@ -1,15 +1,15 @@
 package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Pins the bench harness's failure rule: a lane that throws is a failure,
-  * never a (fast) sample, and the summary line still fits its budget; and
-  * the per-lane compile counter counts cache misses, not cache hits.
+  * never a (fast) sample, and the summary line still fits its budget; the
+  * per-lane compile counter counts cache misses, not cache hits; and the
+  * driver contract's JSON strings parse back to what was written.
   */
-class BenchSpec extends AnyFunSuite {
+class BenchSpec extends AnyFunSuite with SparkSuite {
 
   test("sampleLane: a throwing lane yields its error and no samples") {
     var calls = 0
@@ -45,10 +45,6 @@ class BenchSpec extends AnyFunSuite {
   }
 
   test("codegenCompiles: a new query compiles, its identical re-run hits the cache") {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     // a literal no other suite uses, so the first run's source is new
     def run(): Unit = { spark.range(100).selectExpr("sum(id * 7919 + 104723)").collect(); () }
     val c0 = Bench.codegenCompiles
@@ -57,5 +53,17 @@ class BenchSpec extends AnyFunSuite {
     assert(c1 > c0)
     run()
     assert(Bench.codegenCompiles === c1)
+  }
+
+  test("jsonString: quote, backslash and every control character round-trip through Jackson") {
+    val controls = (0 until 0x20).map(_.toChar).mkString
+    val samples = Seq("", "plain", "say \"hi\"", "back\\slash", "a\nb\rc\td",
+      controls, s"SELECT '\\' AS x\n\tFROM t -- \"$controls\"", "é ü 中 \u2028")
+    val mapper = new ObjectMapper()
+    for (s <- samples) {
+      val lit = Verify.jsonString(s)
+      assert(!lit.exists(_ < ' '), s"raw control character in $lit")
+      assert(mapper.readTree(lit).asText() === s)
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.queries.CurationQueries
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,14 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * End-to-end value coverage lives in the driver's DuckDB compare; these pin
   * the operator semantics on hand-auditable inputs.
   */
-class CurationSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CurationSpec extends AnyFunSuite with SparkSuite {
 
   private val SF = "/root/testdata/sf0.001"
 

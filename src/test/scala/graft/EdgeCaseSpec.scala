@@ -3,7 +3,6 @@ package graft
 import graft.ext.{Ann, Dedup}
 import graft.model.{Scene, SimilarityAlgorithm}
 import graft.pipelines.{HotTopicsPipeline, PrecisionEval, RecommendPipeline}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,14 +12,7 @@ import java.sql.Date
   * throw) on empty/out-of-range inputs — the shapes a real scheduler feeds
   * them at partition boundaries.
   */
-class EdgeCaseSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EdgeCaseSpec extends AnyFunSuite with SparkSuite {
 
   import spark.implicits._
 

@@ -1,18 +1,10 @@
 package graft
 
 import graft.ext.{Ann, Dedup, Multimodal, TextAnalysis}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class ExtSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExtSpec extends AnyFunSuite with SparkSuite {
 
   import spark.implicits._
 
@@ -473,7 +465,7 @@ class ExtSpec extends AnyFunSuite {
       train(0) -> a, va -> a,            // train↔val exact dup
       train(1) -> b, te -> b,            // train↔test exact dup
       train(2) -> "a lone unpaired document sits here alone quietly")
-    val dir = java.nio.file.Files.createTempDirectory("extq268").toString
+    val dir = tempDir("extq268")
     docs.map { case (id, t) => (id, t, "en", "srcT", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -497,7 +489,7 @@ class ExtSpec extends AnyFunSuite {
   }
 
   private def writeDocsFull(docs: Seq[(Long, String, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("extlane").toString
+    val dir = tempDir("extlane")
     docs.map { case (id, t, lang, src) => (id, t, lang, src, t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -10,25 +10,17 @@ import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path, RawLocalFileSystem}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Pins [[ForkFreeRawLocalFileSystem]] to stock `RawLocalFileSystem`
   * semantics where it overrides it, and pins what it is for: with the
   * `file:` bindings in place, a parquet write and a stateful stream start no
-  * `chmod`, `readlink`, `stat` or `ls` child process. The test JVM carries
-  * the bindings as `-D` options (build.sbt), as every entry point does
-  * through `GraftScale.configure`.
+  * `chmod`, `readlink`, `stat` or `ls` child process. The suites' session
+  * publishes the bindings through `GraftScale.session`, as every entry
+  * point does.
   */
-class ForkFreeLocalFsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ForkFreeLocalFsSpec extends AnyFunSuite with SparkSuite {
 
   private def initialized[F <: RawLocalFileSystem](fs: F): F = {
     fs.initialize(URI.create("file:///"), new Configuration())
@@ -45,7 +37,7 @@ class ForkFreeLocalFsSpec extends AnyFunSuite {
   private def octal(s: String) = new FsPermission(Integer.parseInt(s, 8).toShort)
 
   test("setPermission and permissioned create/mkdirs give stock's POSIX modes; the sticky bit takes the stock path") {
-    val root = Files.createTempDirectory("ffls-perm").toFile
+    val root = new java.io.File(tempDir("ffls-perm"))
     for (m <- Seq("644", "755", "700", "600"); (fs, side) <- Seq(stock -> "stock", forkFree -> "nio")) {
       val perm = octal(m)
       // direct chmod: exactly the requested bits
@@ -71,7 +63,7 @@ class ForkFreeLocalFsSpec extends AnyFunSuite {
   }
 
   test("getFileLinkStatus agrees with stock on files, directories, symlinks and dangling symlinks") {
-    val root = Files.createTempDirectory("ffls-link").toFile
+    val root = new java.io.File(tempDir("ffls-link"))
     val file = new File(root, "file")
     Files.write(file.toPath, Array.fill[Byte](123)(7))
     val dir = new File(root, "dir")
@@ -105,7 +97,7 @@ class ForkFreeLocalFsSpec extends AnyFunSuite {
     ForkFreeLocalFs.bindings.foreach { case (k, v) => conf.set(k.stripPrefix("spark.hadoop."), v) }
     val fc = FileContext.getFileContext(URI.create("file:///"), conf)
     assert(fc.getDefaultFileSystem.isInstanceOf[ForkFreeLocalFs])
-    val root = new Path(Files.createTempDirectory("ffls-fc").toUri)
+    val root = new Path(Paths.get(tempDir("ffls-fc")).toUri)
     val (tmp, dst) = (new Path(root, ".1.tmp"), new Path(root, "1"))
     def write(p: Path, s: String): Unit = {
       val out = fc.create(p, java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE))
@@ -128,7 +120,7 @@ class ForkFreeLocalFsSpec extends AnyFunSuite {
   private def processStarts[T](body: => T): (T, Seq[String]) = {
     val rec = new Recording()
     rec.enable("jdk.ProcessStart").withStackTrace()
-    val file = Files.createTempFile("ffls-forks", ".jfr")
+    val file = Paths.get(tempDir("ffls-jfr"), "forks.jfr")
     try {
       rec.start()
       val result = try body finally rec.stop()
@@ -136,7 +128,7 @@ class ForkFreeLocalFsSpec extends AnyFunSuite {
       result -> RecordingFile.readAllEvents(file).asScala.toSeq
         .filter(_.getEventType.getName == "jdk.ProcessStart")
         .map(_.getString("command"))
-    } finally { rec.close(); Files.deleteIfExists(file); () }
+    } finally rec.close()
   }
 
   test("bound file: scheme: a parquet write and a 3-batch stateful stream start no chmod/readlink/stat/ls") {
@@ -147,7 +139,7 @@ class ForkFreeLocalFsSpec extends AnyFunSuite {
     assert(FileContext.getFileContext(URI.create("file:///"), hconf)
       .getDefaultFileSystem.isInstanceOf[ForkFreeLocalFs])
 
-    val base = Files.createTempDirectory("ffls-forks").toString
+    val base = tempDir("ffls-forks")
     // three day slices of clicks keyed by news id, one file each
     (1 to 3).foreach { d =>
       (0 until 40).map(i => (i % 5L, Timestamp.valueOf(f"2024-01-$d%02d ${i % 24}%02d:00:00")))

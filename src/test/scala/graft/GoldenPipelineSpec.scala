@@ -4,7 +4,6 @@ import graft.io.CsvSources
 import graft.model.{Scene, SimilarityAlgorithm}
 import graft.pipelines._
 import graft.text.{TextRankCore, TfIdf}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Date
@@ -16,14 +15,7 @@ import java.sql.Date
   * freeze the frozen-spec choices for the reference's absent classes into
   * concrete expected values.
   */
-class GoldenPipelineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GoldenPipelineSpec extends AnyFunSuite with SparkSuite {
 
   private def fixture(name: String): String =
     getClass.getClassLoader.getResource(s"fixtures/$name").getPath
@@ -88,7 +80,7 @@ class GoldenPipelineSpec extends AnyFunSuite {
     val clicks = CsvSources.loadClicks(spark, fixture("clicks.csv")).toDF()
     val tweets = CsvSources.loadTweets(spark, fixture("tweets.csv")).toDF()
       .withColumn("tweetId", monotonically_increasing_id())
-    val base = java.nio.file.Files.createTempDirectory("graft_stage").toString
+    val base = tempDir("graft_stage")
 
     val newsKw = TfIdfKeywords.newsKeywords(news, Seq(col("content") -> 1.0), 5)
       .join(news.select(col("id"), col("date")), "id")

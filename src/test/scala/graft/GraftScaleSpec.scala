@@ -1,7 +1,6 @@
 package graft
 
 import graft.runtime.{GraftScale, Stage}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -16,14 +15,7 @@ import java.nio.file.Files
   * bindings: Spark reads them once per JVM (Hadoop caches the file system),
   * so the spec pins the system properties configure sets.
   */
-class GraftScaleSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GraftScaleSpec extends AnyFunSuite with SparkSuite {
 
   private def withRestoredProp[T](key: String)(body: => T): T = {
     val saved = sys.props.get(key)
@@ -35,7 +27,7 @@ class GraftScaleSpec extends AnyFunSuite {
   }
 
   test("dirBytes sums nested directories") {
-    val root = Files.createTempDirectory("gsspec").toFile
+    val root = new java.io.File(tempDir("gsspec"))
     val sub = new java.io.File(root, "a/b")
     assert(sub.mkdirs())
     Files.write(new java.io.File(root, "x.bin").toPath, Array.fill[Byte](1000)(1))
@@ -45,14 +37,14 @@ class GraftScaleSpec extends AnyFunSuite {
 
   test("configure: small dir publishes ser=false, large dir ser=true") {
     withRestoredProp("graft.stage.ser") {
-      val small = Files.createTempDirectory("gs-small").toFile
+      val small = new java.io.File(tempDir("gs-small"))
       Files.write(new java.io.File(small, "t.parquet").toPath,
         Array.fill[Byte](1024)(0))
       assert(!GraftScale.configure(small.getPath))
       assert(sys.props("graft.stage.ser") === "false")
 
       // sparse file: logical length crosses LargeBytes without writing 64 MB
-      val large = Files.createTempDirectory("gs-large").toFile
+      val large = new java.io.File(tempDir("gs-large"))
       val raf = new java.io.RandomAccessFile(
         new java.io.File(large, "big.parquet"), "rw")
       try raf.setLength(GraftScale.LargeBytes + 1) finally raf.close()
@@ -64,7 +56,7 @@ class GraftScaleSpec extends AnyFunSuite {
   test("configure: sizes the codegen cache when unset, keeps an explicit value") {
     val key = GraftScale.CodegenCacheKey
     withRestoredProp("graft.stage.ser")(withRestoredProp(key) {
-      val dir = Files.createTempDirectory("gs-codegen").toFile.getPath
+      val dir = tempDir("gs-codegen")
       System.clearProperty(key)
       GraftScale.configure(dir)
       assert(sys.props.get(key) === Some(GraftScale.CodegenCacheEntries.toString))
@@ -81,7 +73,7 @@ class GraftScaleSpec extends AnyFunSuite {
     assert(fsKey === "spark.hadoop.fs.file.impl")
     assert(afsKey === "spark.hadoop.fs.AbstractFileSystem.file.impl")
     withRestoredProp("graft.stage.ser")(withRestoredProp(fsKey)(withRestoredProp(afsKey) {
-      val dir = Files.createTempDirectory("gs-localfs").toFile.getPath
+      val dir = tempDir("gs-localfs")
       Seq(fsKey, afsKey).foreach(System.clearProperty)
       GraftScale.configure(dir)
       bindings.foreach { case (k, v) => assert(sys.props.get(k) === Some(v)) }
@@ -101,5 +93,36 @@ class GraftScaleSpec extends AnyFunSuite {
     Stage.clear()
     assert(Stage.shared(spark, "gsspec-k1")(build()) === 3) // rebuilt
     Stage.clear()
+  }
+
+  test("the session is built only in GraftScale.session and the suites' SparkSuite") {
+    // one builder: every entry point calls GraftScale.session, every suite
+    // gets its session from SparkSuite, and the periodic-GC knob is gone.
+    // Comment lines may name them; code lines elsewhere may not. The
+    // needles are spliced so this file does not match itself.
+    import scala.jdk.CollectionConverters._
+    def scalaFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(scalaFiles)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    def codeHits(root: String, needle: String): Seq[String] = {
+      val dir = new java.io.File(root)
+      assert(dir.isDirectory, s"no sources at ${dir.getAbsolutePath}")
+      for {
+        f <- scalaFiles(dir)
+        (line, i) <- Files.readAllLines(f.toPath).asScala.toSeq.zipWithIndex
+        code = line.trim
+        if !(code.startsWith("*") || code.startsWith("/*") || code.startsWith("//"))
+        if code.contains(needle)
+      } yield s"${dir.toPath.relativize(f.toPath)}:${i + 1}"
+    }
+    val builder = "SparkSession" + ".builder"
+    val knob = "SPARK_GRAFT_" + "PERIODIC_GC"
+    val mainHits = codeHits("src/main/scala", builder)
+    assert(mainHits.nonEmpty && mainHits.forall(_.startsWith("graft/runtime/GraftScale.scala:")),
+      mainHits.mkString("\n"))
+    val testHits = codeHits("src/test/scala", builder)
+    assert(testHits.forall(_.startsWith("graft/SparkSuite.scala:")), testHits.mkString("\n"))
+    val knobHits = Seq("src/main/scala", "src/test/scala").flatMap(codeHits(_, knob))
+    assert(knobHits.isEmpty, knobHits.mkString("\n"))
   }
 }

@@ -1,22 +1,13 @@
 package graft
 
 import graft.ext.{Dedup, Graph}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantics pins for ext.Graph.pageRank and the q100 EWMA fold: mass
   * conservation, symmetry, hand-computed fixpoints.
   */
-class GraphTrendSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true") // legacy nanos events layout; harmless for the round-6+ µs layout
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GraphTrendSpec extends AnyFunSuite with SparkSuite {
 
   import spark.implicits._
 
@@ -43,7 +34,7 @@ class GraphTrendSpec extends AnyFunSuite {
 
   test("reliable checkpoint path: pageRank and connectedComponents match the localCheckpoint results") {
     graft.runtime.Stage.newQueryScope()
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_reliable_ck").toString
+    val ckDir = tempDir("graft_reliable_ck")
     val reliable = graft.runtime.Reroot.Reliable(ckDir)
     // deployment default: Local unless SPARK_GRAFT_CHECKPOINT_DIR is set
     assert(!sys.env.contains("SPARK_GRAFT_CHECKPOINT_DIR"))
@@ -84,10 +75,7 @@ class GraphTrendSpec extends AnyFunSuite {
       // final label frame); every intermediate round was rolled away.
       assert(rddDirs() === afterPr + 2L,
         "CC rolling cleanup must leave only sym + final labels")
-    } finally {
-      graft.runtime.Stage.newQueryScope()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckDir)); ()
-    }
+    } finally graft.runtime.Stage.newQueryScope()
   }
 
   test("personalizedPageRank: mass sums to 1, localizes around the seed, uniform seeds = pageRank") {
@@ -202,20 +190,12 @@ class GraphTrendSpec extends AnyFunSuite {
       s"expected a lost-checkpoint-block failure, got: ${causes(err).mkString(" | ")}")
 
     graft.runtime.Stage.newQueryScope()
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_ck_loss").toString
-    try {
-      val rel = Dedup.connectedComponents(verts, ccEdges,
-        reroot = graft.runtime.Reroot.Reliable(ckDir))
-      assert(rel.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap === expected)
-      dropTestBlocks()
-      // Reliable contract: the same loss recomputes from the checkpoint
-      // FILES and returns the identical labels.
-      assert(rel.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap === expected)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(ckDir))
-    }
+    val rel = Dedup.connectedComponents(verts, ccEdges,
+      reroot = graft.runtime.Reroot.Reliable(tempDir("graft_ck_loss")))
+    assert(rel.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap === expected)
+    dropTestBlocks()
+    // Reliable contract: the same loss recomputes from the checkpoint
+    // FILES and returns the identical labels.
+    assert(rel.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap === expected)
   }
 }

@@ -1,26 +1,16 @@
 package graft
 
 import graft.io.{CsvSources, Tables, Writers}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
-class IoSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IoSpec extends AnyFunSuite with SparkSuite {
 
   import spark.implicits._
 
-  private def tmp(): String = Files.createTempDirectory("graft_io").toString
-
   test("S1-S3: schema-checked CSV loaders round-trip the entity types") {
-    val dir = tmp()
+    val dir = tempDir("graft_io")
     Files.writeString(java.nio.file.Paths.get(s"$dir/news.csv"),
       "id,date,title,description,content\n" +
         "1,2024-01-02,Title A,Desc A,spark flink batch\n" +
@@ -40,7 +30,7 @@ class IoSpec extends AnyFunSuite {
   }
 
   test("K1/F15: formatted-text sink renders documents and recommendations") {
-    val outDocs = tmp() + "/docs_txt"
+    val outDocs = tempDir("graft_io") + "/docs_txt"
     val docs = Seq(
       (Some(1L), None: Option[Long], Some(java.sql.Date.valueOf("2024-01-02")),
         Seq(("spark", 1.5), ("flink", 0.25)))
@@ -51,7 +41,7 @@ class IoSpec extends AnyFunSuite {
     val lines = spark.read.text(outDocs).as[String].collect()
     assert(lines.toSeq === Seq("1||2024-01-02|spark:1.500000;flink:0.250000"))
 
-    val outRecs = tmp() + "/recs_txt"
+    val outRecs = tempDir("graft_io") + "/recs_txt"
     val recs = Seq((7L, java.sql.Date.valueOf("2024-01-02"), Seq(3L, 1L, 2L)))
       .toDF("userId", "date", "news")
     Writers.writeFormattedText(recs, Writers.recommendationRender, outRecs)
@@ -60,7 +50,7 @@ class IoSpec extends AnyFunSuite {
   }
 
   test("K1 dual write: parquet round-trip preserves nested keywords") {
-    val base = tmp()
+    val base = tempDir("graft_io")
     val docs = Seq((10L, Seq(("a", 1.0), ("b", 2.0))))
       .toDF("id", "kw")
       .withColumn("keywords", transform(col("kw"),
@@ -75,7 +65,7 @@ class IoSpec extends AnyFunSuite {
 
   test("events NTZ normalization: instant-exact under UTC, loud without it") {
     // NTZ events fixture (the round-6+ driver layout)
-    val dir = tmp()
+    val dir = tempDir("graft_io")
     Seq((1L, 42L, "click", "2024-01-05 10:00:00"))
       .toDF("user_id", "event_id", "event_type", "w")
       .withColumn("ts", to_timestamp_ntz(col("w"))).drop("w")

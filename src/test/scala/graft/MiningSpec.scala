@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,15 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * NDCG boundary cases. End-to-end oracle coverage lives in the driver's
   * DuckDB compare; these pin semantics on hand-auditable inputs.
   */
-class MiningSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MiningSpec extends AnyFunSuite with SparkSuite {
 
   import spark.implicits._
 
@@ -301,7 +292,7 @@ class MiningSpec extends AnyFunSuite {
 
   test("q130 transformWithState: state accumulates across micro-batches") {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val dir = java.nio.file.Files.createTempDirectory("tws_spec").toFile
+    val dir = new java.io.File(tempDir("tws_spec"))
     dir.deleteOnExit()
     // three single-row files -> three micro-batches for the same user
     Seq((1L, 100L, 0), (1L, 50L, 1), (1L, 200L, 0)).zipWithIndex.foreach {

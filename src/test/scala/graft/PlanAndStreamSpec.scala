@@ -2,7 +2,7 @@ package graft
 
 import graft.ext.Ann
 import graft.queries.RelationalQueries
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,17 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * scan, small dimensions broadcast, whole-stage codegen covering the hot
   * path — plus native-expression parity and the streaming variant.
   */
-class PlanAndStreamSpec extends AnyFunSuite {
+class PlanAndStreamSpec extends AnyFunSuite with SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   import spark.implicits._
 
@@ -96,7 +88,7 @@ class PlanAndStreamSpec extends AnyFunSuite {
   }
 
   test("partitionBy(date) write: a date filter prunes partitions at the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = tempDir("graft_part")
     val kw = graft.io.Tables.clicks(spark, sf)
       .select($"userId", $"newsId", $"date")
     graft.io.Writers.writeDual(kw, concat_ws("|", $"userId", $"newsId"),
@@ -222,7 +214,7 @@ class PlanAndStreamSpec extends AnyFunSuite {
   test("foreachBatch idempotent sink: batch replay rewrites instead of duplicating") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val out = java.nio.file.Files.createTempDirectory("graft_feb_test").toString + "/sink"
+    val out = tempDir("graft_feb_test") + "/sink"
 
     val stream = MemoryStream[(Long, String)]
     val q = stream.toDF().toDF("id", "payload")
@@ -286,7 +278,7 @@ class PlanAndStreamSpec extends AnyFunSuite {
   }
 
   test("streaming aggregation recovers from a mid-stream kill via checkpoint (exactly-once state)") {
-    val base = java.nio.file.Files.createTempDirectory("graft_ckpt_test").toString
+    val base = tempDir("graft_ckpt_test")
     val srcDir = s"$base/src"
     val ckpt = s"$base/ckpt"
     // split the events into 4 files so maxFilesPerTrigger=1 forces multiple
@@ -326,7 +318,7 @@ class PlanAndStreamSpec extends AnyFunSuite {
 
   test("interval join killed mid-stream resumes from checkpoint: buffered state joins post-restart rows, file sink stays exactly-once") {
     import java.sql.Timestamp
-    val base = java.nio.file.Files.createTempDirectory("graft_ij_restart").toString
+    val base = tempDir("graft_ij_restart")
     val srcDir = s"$base/src"; val ckpt = s"$base/ckpt"; val outDir = s"$base/out"
     def t(min: Int) = Timestamp.valueOf(f"2024-03-01 10:$min%02d:00")
     val cols = Seq("user_id", "event_id", "event_type", "ts")
@@ -392,7 +384,7 @@ class PlanAndStreamSpec extends AnyFunSuite {
 
   test("a symmetric-join checkpoint restarted under the keyed interval join fails with a state error, never resumes with empty buffers") {
     import java.sql.Timestamp
-    val base = java.nio.file.Files.createTempDirectory("graft_ij_ckpt_compat").toString
+    val base = tempDir("graft_ij_ckpt_compat")
     val srcDir = s"$base/src"
     def t(min: Int) = Timestamp.valueOf(f"2024-03-01 10:$min%02d:00")
     val cols = Seq("user_id", "event_id", "event_type", "ts")
@@ -425,7 +417,7 @@ class PlanAndStreamSpec extends AnyFunSuite {
 
   test("q36 hot-key windows stopped at a batch boundary resume from checkpoint: the idempotent parquet sink equals the uninterrupted run, no window key twice") {
     import java.sql.Timestamp
-    val base = java.nio.file.Files.createTempDirectory("graft_q36_restart").toString
+    val base = tempDir("graft_q36_restart")
     // one file of clicks keyed by news id per day; each day's rows close
     // the day before it (1-day windows, 1 h watermark), day 4 stays open
     def day(d: Int) = (0 until 48).map(i =>
@@ -747,7 +739,7 @@ class PlanAndStreamSpec extends AnyFunSuite {
 
   test("TWS timer lane killed mid-stream resumes from checkpoint: ValueState and registered timers survive a restart") {
     import graft.streaming.{StreamConf, StreamingTws}
-    val base = java.nio.file.Files.createTempDirectory("graft_tws_restart").toString
+    val base = tempDir("graft_tws_restart")
     val srcDir = s"$base/src"; val ckpt = s"$base/ckpt"; val outDir = s"$base/out"
     def ms(min: Int): Long =
       java.sql.Timestamp.valueOf(f"2024-03-01 10:$min%02d:00").getTime
@@ -803,7 +795,7 @@ class PlanAndStreamSpec extends AnyFunSuite {
     import graft.streaming.{StreamConf, StreamingTws}
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import org.apache.spark.sql.{Encoder, Encoders}
-    val base = java.nio.file.Files.createTempDirectory("graft_tws_list_restart").toString
+    val base = tempDir("graft_tws_list_restart")
     val srcDir = s"$base/src"; val ckpt = s"$base/ckpt"
     // day ordinals split ACROSS the kill: users 1/2 act on days 10 and 11
     // pre-kill, then again on day 11 and newly on day 12 post-restart
@@ -865,7 +857,7 @@ class PlanAndStreamSpec extends AnyFunSuite {
     import graft.streaming.{StreamConf, StreamingTws}
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import org.apache.spark.sql.{Encoder, Encoders}
-    val base = java.nio.file.Files.createTempDirectory("graft_tws_map_restart").toString
+    val base = tempDir("graft_tws_map_restart")
     val srcDir = s"$base/src"; val ckpt = s"$base/ckpt"; val outDir = s"$base/out"
     // per-type counts split ACROSS the kill: user 1 clicks twice and views
     // once pre-kill; user 2 views once
@@ -976,7 +968,7 @@ class PlanAndStreamSpec extends AnyFunSuite {
 
     // streaming side: planted 30%-share key in a 500-row hour, closed by a
     // far-future row; the final (open) window never reaches the ledger
-    val dir = java.nio.file.Files.createTempDirectory("graft_hotdet").toString
+    val dir = tempDir("graft_hotdet")
     val base = Timestamp.valueOf("2024-01-05 10:00:00").getTime
     val rows = (0 until 500).map { i =>
       val u = if (i % 10 < 3) 7L else 100L + i % 50
@@ -992,7 +984,7 @@ class PlanAndStreamSpec extends AnyFunSuite {
 
   test("events schema probe: missing-path fallback is not memoized; a real footer is") {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-    val dir = java.nio.file.Files.createTempDirectory("graft_probe").toString
+    val dir = tempDir("graft_probe")
     val path = s"$dir/events.parquet"
     // Path absent: long fallback (a stream over it yields no rows)...
     val before = graft.streaming.StreamingHotTopics

@@ -2,7 +2,6 @@ package graft
 
 import graft.functions.KeywordExpressions.keywordDot
 import graft.sim.{Scoring, Similarities}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * crossJoin + keyword_dot + `score > 0` plan must optimize into the
   * inverted-index equi-join + aggregation, with identical results.
   */
-class PlansSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlansSpec extends AnyFunSuite with SparkSuite {
 
   import spark.implicits._
 
@@ -196,7 +188,7 @@ class PlansSpec extends AnyFunSuite {
     }
     spark.sparkContext.addSparkListener(l)
     try {
-      val dir = java.nio.file.Files.createTempDirectory("graft_cut_jobs").toString
+      val dir = tempDir("graft_cut_jobs")
       val writeJobs = jobsOf(df.write.mode("overwrite").parquet(dir))
       var cut: org.apache.spark.sql.DataFrame = null
       // the cut is the write alone: reading back starts no job

@@ -1,7 +1,7 @@
 package graft
 
 import graft.queries.ReleaseQueries
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Fixture-level pins for the round-9 release-audit lanes: q271 duplicated
@@ -9,19 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * (counts + char delta recomputed with java.util.regex), q275 eval
   * contamination (split-derived ids, hand-counted gram overlap).
   */
-class ReleaseSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ReleaseSpec extends AnyFunSuite with SparkSuite {
 
   import spark.implicits._
 
   private def writeDocs(docs: Seq[(Long, String)], src: Long => String = _ => "srcT"): String = {
-    val dir = java.nio.file.Files.createTempDirectory("relspec").toString
+    val dir = tempDir("relspec")
     docs.map { case (id, t) => (id, t, "en", src(id), t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

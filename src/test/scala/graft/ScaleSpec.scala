@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,15 +11,7 @@ import java.sql.{Date, Timestamp}
   * the driver's DuckDB compare; these pin the operator semantics on
   * hand-auditable inputs.
   */
-class ScaleSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true") // legacy nanos events layout; harmless for the round-6+ µs layout
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ScaleSpec extends AnyFunSuite with SparkSuite {
 
   import spark.implicits._
 
@@ -299,30 +290,26 @@ class ScaleSpec extends AnyFunSuite {
     // (edit distance 0 on their heads) land in buckets 0 and 1 and never
     // meet. This pins that loss explicitly — the oracle mirrors the same
     // key, so both engines lose exactly the same pairs.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bucket_edge").toString
-    try {
-      val pfx = "PFX12345" // shared 8-char prefix: same prefix for all docs
-      def doc(id: Long, headTail: String, len: Int): (Long, String) = {
-        val head = pfx + headTail * 32 // 40-char head (levenshtein input)
-        (id, head + "B" * (len - head.length))
-      }
-      Seq(
-        doc(1L, "A", 63), // bucket 0 ─┐ identical heads, dist 0 — LOST:
-        doc(2L, "A", 65), // bucket 1 ─┘ straddles the 64-char boundary
-        doc(3L, "C", 70), // bucket 1 ─┐ identical heads, dist 0 — KEPT:
-        doc(4L, "C", 74)  // bucket 1 ─┘ same bucket, same prefix
-      ).toDF("doc_id", "text")
-        .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-      val pairs = SparkEntry.queries("q225_fuzzy_block_dedup")(spark, tmp)
-        .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-      // docs 2/3/4 share one block (prefix|1) but 2's head differs from
-      // 3/4's by 32 edits > the 10 threshold, so exactly one pair survives
-      assert(pairs === Set((3L, 4L)),
-        s"expected only the in-bucket pair, got $pairs")
-      assert(!pairs.contains((1L, 2L)),
-        "boundary-straddling near-dup must be (documentedly) lost")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp)); ()
+    val tmp = tempDir("graft_bucket_edge")
+    val pfx = "PFX12345" // shared 8-char prefix: same prefix for all docs
+    def doc(id: Long, headTail: String, len: Int): (Long, String) = {
+      val head = pfx + headTail * 32 // 40-char head (levenshtein input)
+      (id, head + "B" * (len - head.length))
     }
+    Seq(
+      doc(1L, "A", 63), // bucket 0 ─┐ identical heads, dist 0 — LOST:
+      doc(2L, "A", 65), // bucket 1 ─┘ straddles the 64-char boundary
+      doc(3L, "C", 70), // bucket 1 ─┐ identical heads, dist 0 — KEPT:
+      doc(4L, "C", 74)  // bucket 1 ─┘ same bucket, same prefix
+    ).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    val pairs = SparkEntry.queries("q225_fuzzy_block_dedup")(spark, tmp)
+      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    // docs 2/3/4 share one block (prefix|1) but 2's head differs from
+    // 3/4's by 32 edits > the 10 threshold, so exactly one pair survives
+    assert(pairs === Set((3L, 4L)),
+      s"expected only the in-bucket pair, got $pairs")
+    assert(!pairs.contains((1L, 2L)),
+      "boundary-straddling near-dup must be (documentedly) lost")
   }
 }

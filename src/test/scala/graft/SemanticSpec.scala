@@ -1,7 +1,7 @@
 package graft
 
 import graft.queries.SemanticQueries
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Fixture-level pins for the round-7 LLM-curation lanes (q252 SemDeDup,
@@ -10,19 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * documents/embeddings tables and is checked against hand-derived (q252,
   * q253) or independently re-implemented (q254) expectations.
   */
-class SemanticSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SemanticSpec extends AnyFunSuite with SparkSuite {
 
   import spark.implicits._
-
-  private def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("semspec").toString
 
   private def writeDocs(dir: String, docs: Seq[(Long, String, String)]): Unit =
     docs.map { case (id, text, lang) => (id, text, lang, "srcT", text.length.toLong) }
@@ -40,7 +30,7 @@ class SemanticSpec extends AnyFunSuite {
   }
 
   test("q252: within-cluster near-dups prune the higher id; seeds survive") {
-    val dir = tmpDir()
+    val dir = tempDir("semspec")
     // Seeds (vec_id < 8) are the ± unit basis of R⁴ — each lands in its own
     // cluster. v8 is a scaled copy of seed 2 (cosine 1.0, same cluster);
     // v9 sits on top of seed 0 (cosine ≈ .995). Both must be pruned by
@@ -62,7 +52,7 @@ class SemanticSpec extends AnyFunSuite {
   }
 
   test("q253: dup requires >=2 DISTINCT docs; short docs are excluded") {
-    val dir = tmpDir()
+    val dir = tempDir("semspec")
     writeDocs(dir, Seq(
       (1L, "a b c d e x y z", "en"),          // 4 grams, "a b c d e" shared
       (2L, "q r a b c d e", "en"),            // 3 grams, shares "a b c d e"
@@ -79,7 +69,7 @@ class SemanticSpec extends AnyFunSuite {
   }
 
   test("q252: duplicating the corpus prunes every copy, originals unchanged") {
-    val dir = tmpDir()
+    val dir = tempDir("semspec")
     val base = Seq[(Long, Seq[Float])](
       0L -> Seq(1f, 0f, 0f, 0f), 1L -> Seq(0f, 1f, 0f, 0f),
       2L -> Seq(0f, 0f, 1f, 0f), 3L -> Seq(0f, 0f, 0f, 1f),
@@ -107,7 +97,7 @@ class SemanticSpec extends AnyFunSuite {
     // the only vector pointing at angle 8/9·π/2) must anchor its own
     // cluster — under the old fixed K=8 it would fold into a neighbor and
     // the cluster histogram would top out at 8 ids.
-    val dir = tmpDir()
+    val dir = tempDir("semspec")
     def dir2(i: Int): Seq[Float] = {
       val a = i * math.Pi / 2 / 9
       Seq(math.cos(a).toFloat, math.sin(a).toFloat)
@@ -121,7 +111,7 @@ class SemanticSpec extends AnyFunSuite {
   }
 
   test("q253: duplicating the corpus makes every span a cross-doc dup (frac 1)") {
-    val dir = tmpDir()
+    val dir = tempDir("semspec")
     val base = Seq(
       (1L, "a b c d e x y z", "en"),
       (3L, "m n o p s t", "fr"),
@@ -134,7 +124,7 @@ class SemanticSpec extends AnyFunSuite {
   }
 
   test("q254: matches an independent in-memory reference implementation") {
-    val dir = tmpDir()
+    val dir = tempDir("semspec")
     val docs = Seq(
       (1L, "the cat sat on the mat", "en"),
       (2L, "the dog sat on the cat", "en"),
@@ -194,7 +184,7 @@ class SemanticSpec extends AnyFunSuite {
   }
 
   test("q255: exact integer weights, per-doc md5 draw, and the 3x cap") {
-    val dir = tmpDir()
+    val dir = tempDir("semspec")
     // src0: 9 docs, src9: 1 doc. N=10, Σ(i+1)=11.
     //   w(src0) = halfup(1·10·1e6 / (11·9))  = 101010 → base 0, frac .101010
     //   w(src9) = halfup(10·10·1e6 / (11·1)) = 9090909 → capped 3000000 →
@@ -215,7 +205,7 @@ class SemanticSpec extends AnyFunSuite {
   }
 
   test("q256: manifest matches the sequential snake deal; shards balanced") {
-    val dir = tmpDir()
+    val dir = tempDir("semspec")
     // 40 docs with token counts 1..40 (words of one repeated letter) —
     // enough for two full passes + a partial, so the snake reversal and the
     // balance property are both exercised.
@@ -242,7 +232,7 @@ class SemanticSpec extends AnyFunSuite {
   }
 
   test("q257: each rule kills its engineered doc; survivors counted down") {
-    val dir = tmpDir()
+    val dir = tempDir("semspec")
     val fiveLetter = Seq("alpha", "betas", "gamma", "delta", "epsil", "zetas",
       "etaaa", "theta", "iotas", "kappa", "lambd", "muuuu", "nuuuu", "xiiii", "piiii")
     val docs = Seq(
@@ -274,7 +264,7 @@ class SemanticSpec extends AnyFunSuite {
   }
 
   test("q260: add-1 bigram NLL matches the hand-derived model") {
-    val dir = tmpDir()
+    val dir = tempDir("semspec")
     writeDocs(dir, Seq(
       (1L, "a b a b", "en"),  // bigrams (a b)x2, (b a)x1
       (2L, "a b c", "en"),    // (a b), (b c)
@@ -293,7 +283,7 @@ class SemanticSpec extends AnyFunSuite {
   }
 
   test("q276: signals frame joins hand-derived rule stats with the q260 score") {
-    val dir = tmpDir()
+    val dir = tempDir("semspec")
     writeDocs(dir, Seq(
       (1L, "the aa the bb", "en"),  // n=4, uq=3, sl=10, topk=2, stopword yes
       (2L, "cc dd ee", "fr"),       // n=3, uq=3, sl=6, topk=1, no stopword
@@ -312,7 +302,7 @@ class SemanticSpec extends AnyFunSuite {
   }
 
   test("q261: PMI ranking over min-count-floored pairs") {
-    val dir = tmpDir()
+    val dir = tempDir("semspec")
     writeDocs(dir, Seq(
       (1L, Seq.fill(5)("a b").mkString(" "), "en"),   // (a b)x5, (b a)x4
       (2L, Seq.fill(6)("c d").mkString(" "), "en")))  // (c d)x6, (d c)x5
@@ -331,7 +321,7 @@ class SemanticSpec extends AnyFunSuite {
   }
 
   test("q262: split assignment matches an independent md5 recompute") {
-    val dir = tmpDir()
+    val dir = tempDir("semspec")
     val docs = (0L until 40L).map(i =>
       (i, Seq.fill((i % 3).toInt + 1)("tok").mkString(" "), if (i % 2 == 0) "en" else "fr"))
     writeDocs(dir, docs)
@@ -354,7 +344,7 @@ class SemanticSpec extends AnyFunSuite {
   }
 
   test("q264: water-filling matches the hand-run greedy, both branches") {
-    val dir = tmpDir()
+    val dir = tempDir("semspec")
     // Token totals per lang: aa 2, bb 4, cc 10. B = 2*16 = 32, E = 3.
     // Greedy ascending: aa capped (3*2*3=18 <= 32), bb capped
     // (24 <= 32-6=26), cc uncapped (30 > 26-12=14) -> gets R=14 alone:
@@ -373,7 +363,7 @@ class SemanticSpec extends AnyFunSuite {
   }
 
   test("q265: minimal-k per target matches the hand-derived curve") {
-    val dir = tmpDir()
+    val dir = tempDir("semspec")
     // Counts: a=6, b=3, c=1 (T=10). 50% -> top-1 (0.6); 75%/90% -> top-2
     // (0.9); 99% -> top-3 (1.0).
     writeDocs(dir, Seq((1L, "a a a a a a b b b c", "en")))
@@ -385,7 +375,7 @@ class SemanticSpec extends AnyFunSuite {
   }
 
   test("q266: complement pairing fits, splits, and singles as derived") {
-    val dir = tmpDir()
+    val dir = tempDir("semspec")
     // n_tok desc: 100, 90, 60, 30, 8. Pairs (100,8)=108 fits (cap 110),
     // (90,30)=120 splits, 60 is the odd singleton. Bins = 1 + 2 + 1.
     // avg_fill = half_up(108*10^4 / 110)/10^4 = 0.9818.
@@ -399,7 +389,7 @@ class SemanticSpec extends AnyFunSuite {
   }
 
   test("q267: tercile cuts at nearest-rank values, hand-derived buckets") {
-    val dir = tmpDir()
+    val dir = tempDir("semspec")
     // Doc i repeats one unique word L_i times: its only bigram type is
     // (w_i w_i) with count L_i - 1, so under the corpus add-1 model
     // avg_nll = -ln(L_i / (L_i + 5)) (V = 6 start words) — strictly

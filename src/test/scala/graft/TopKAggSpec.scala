@@ -2,19 +2,11 @@ package graft
 
 import graft.functions.TopKAggregator
 import graft.ops.Ops
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
 
-class TopKAggSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TopKAggSpec extends AnyFunSuite with SparkSuite {
 
   import spark.implicits._
 
