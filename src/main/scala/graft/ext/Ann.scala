@@ -34,14 +34,6 @@ object Ann {
   def cosineCol(a: Column, b: Column): Column =
     dotCol(a, b) / (normCol(a) * normCol(b))
 
-  /** Native-codegen cosine (graft.functions.VectorExpressions): bit-identical
-    * to [[cosineCol]] (same left-to-right double accumulation) but a tight
-    * primitive loop instead of per-element lambdas — the hot path for Q×N
-    * ANN scans.
-    */
-  def cosineNative(a: Column, b: Column): Column =
-    graft.functions.VectorExpressions.floatVecCosine(a, b)
-
   /** Exact top-k cosine neighbors of each query vector among candidates.
     * queries/candidates: (vec_id, embedding). Returns
     * (q_id, c_id, cosine, rn).

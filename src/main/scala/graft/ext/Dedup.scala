@@ -370,7 +370,6 @@ object Dedup {
 
   /** Hamming distance between two simhashes (for near-dup thresholding). */
   def hamming(a: Int, b: Int): Int = Integer.bitCount(a ^ b)
-  val hammingUdf = udf((a: Int, b: Int) => hamming(a, b))
 
   /** Connected components over a near-duplicate pair graph — resolves
     * pairwise matches into duplicate clusters labeled by their minimum

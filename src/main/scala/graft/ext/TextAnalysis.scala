@@ -1,7 +1,7 @@
 package graft.ext
 
 import graft.text.Tokenizer
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Corpus-analysis operators beyond the reference surface (BASELINE.json
@@ -47,9 +47,4 @@ object TextAnalysis {
     */
   def fingerprint(text: Column): Column =
     md5(concat_ws("|", Tokenizer.tokens(text)).cast("binary"))
-
-  /** (doc_id, predicted_lang, fingerprint) analysis table. */
-  def analyze(docs: DataFrame, idCol: String, textCol: Column): DataFrame =
-    docs.select(col(idCol), langId(textCol).as("predicted_lang"),
-      fingerprint(textCol).as("fingerprint"))
 }

@@ -47,26 +47,6 @@ object TopKAggregator {
     (score, id) => fn(score, id)
   }
 
-  /** Variant retaining (score, id) structs in rank order — for hierarchical
-    * top-k where a later stage re-ranks the union of pre-cut groups and
-    * still needs the scores.
-    */
-  class TopKScored(k: Int) extends Aggregator[ScoredId, Seq[ScoredId], Seq[ScoredId]] {
-    private val inner = new TopK(k)
-    override def zero: Seq[ScoredId] = inner.zero
-    override def reduce(b: Seq[ScoredId], a: ScoredId): Seq[ScoredId] = inner.reduce(b, a)
-    override def merge(x: Seq[ScoredId], y: Seq[ScoredId]): Seq[ScoredId] = inner.merge(x, y)
-    override def finish(b: Seq[ScoredId]): Seq[ScoredId] = b
-    override def bufferEncoder: Encoder[Seq[ScoredId]] = inner.bufferEncoder
-    override def outputEncoder: Encoder[Seq[ScoredId]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[ScoredId]]()
-  }
-
-  def topKScored(k: Int): (Column, Column) => Column = {
-    val fn = udaf(new TopKScored(k), Encoders.product[ScoredId])
-    (score, id) => fn(score, id)
-  }
-
   case class KeyedId(key: String, id: Long)
 
   /** Bounded MIN-k by a STRING sort key, (key asc, id asc) — the

@@ -116,9 +116,4 @@ object VectorExpressions {
 
   def floatVecNormSq(a: Column): Column =
     ExpressionUtils.column(FloatVecNormSq(ExpressionUtils.expression(a)))
-
-  def floatVecCosine(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.functions.sqrt
-    floatVecDot(a, b) / (sqrt(floatVecNormSq(a)) * sqrt(floatVecNormSq(b)))
-  }
 }

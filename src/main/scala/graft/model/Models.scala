@@ -19,15 +19,6 @@ case class Click(userId: Long, newsId: Long, date: Date, count: Int)
 /** Keyword — /root/reference/CosineSimilarity.java:57 (word, value). */
 case class Keyword(word: String, value: Double)
 
-/** DocumentModel — news doc (id set) or user profile (userId set);
-  * /root/reference/TextRank.java:62-65,114-125.
-  */
-case class Document(id: Option[Long], userId: Option[Long], date: Option[Date],
-                    keywords: Seq[Keyword])
-
-/** RecommendationModel — /root/reference/TextRank.java:283-299. */
-case class Recommendation(userId: Long, date: Date, news: Seq[Long])
-
 /** The two similarity modes — /root/reference/SimilarityAlgorithm.java:6-9. */
 object SimilarityAlgorithm extends Enumeration {
   val CosineSimilarity, EuclideanDistance = Value

@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions._
 
 /** Keyword-profile generation stages (reference E1a/E2 upstream).
   * Outputs are normalized (id-or-userId, word, value) rows — the inverted
-  * form the scale-path scorer consumes directly; `Document`-shaped nested
-  * arrays are one `collect_list(struct(...))` away when the reference's
-  * round-trip format is wanted.
+  * form the scale-path scorer consumes directly; the reference's
+  * `DocumentModel`-shaped nested arrays are one `collect_list(struct(...))`
+  * away when its round-trip format is wanted.
   */
 object TfIdfKeywords {
 

@@ -116,21 +116,10 @@ object RecommendPipeline {
 
     val scored = scene.similarityAlgorithm match {
       case SimilarityAlgorithm.CosineSimilarity =>
-        // F5 calculateX: |common words| / (|k1| · |k2|) — product denominator.
-        val lsize = userWords.groupBy("userId").agg(count(lit(1)).as("_lsize"))
-        val rsize = relevantNews.groupBy("id").agg(count(lit(1)).as("_rsize"))
-        userWords.select(col("userId"), col("word"))
-          .join(relevantNews.select(col("id"), col("word")), "word")
-          .groupBy(col("userId"), col("id"))
-          .agg(count(lit(1)).as("_common"))
-          .join(lsize, "userId")
-          .join(rsize, "id")
-          .withColumn("score", col("_common").cast("double") / (col("_lsize") * col("_rsize")))
+        Scoring.invertedCosineX(userWords.select("userId", "word"), "userId",
+          relevantNews.select("id", "word"), "id")
       case SimilarityAlgorithm.EuclideanDistance =>
-        userWords.select(col("userId"), col("word"), col("value").as("_lv"))
-          .join(relevantNews.select(col("id"), col("word"), col("value").as("_rv")), "word")
-          .groupBy(col("userId"), col("id"))
-          .agg(sum(col("_lv") * col("_rv")).as("score"))
+        Scoring.invertedDot(userWords, "userId", relevantNews, "id")
     }
     // Optional rounding BEFORE the >0 guard and ranking: makes ordering
     // reproducible bit-for-bit across engines (oracle parity).

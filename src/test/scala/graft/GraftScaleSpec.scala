@@ -100,21 +100,9 @@ class GraftScaleSpec extends AnyFunSuite with SparkSuite {
     // gets its session from SparkSuite, and the periodic-GC knob is gone.
     // Comment lines may name them; code lines elsewhere may not. The
     // needles are spliced so this file does not match itself.
-    import scala.jdk.CollectionConverters._
-    def scalaFiles(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(scalaFiles)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    def codeHits(root: String, needle: String): Seq[String] = {
-      val dir = new java.io.File(root)
-      assert(dir.isDirectory, s"no sources at ${dir.getAbsolutePath}")
-      for {
-        f <- scalaFiles(dir)
-        (line, i) <- Files.readAllLines(f.toPath).asScala.toSeq.zipWithIndex
-        code = line.trim
-        if !(code.startsWith("*") || code.startsWith("/*") || code.startsWith("//"))
-        if code.contains(needle)
-      } yield s"${dir.toPath.relativize(f.toPath)}:${i + 1}"
-    }
+    def codeHits(root: String, needle: String): Seq[String] =
+      for ((rel, n, code) <- SourceScan.codeLines(root) if code.contains(needle))
+        yield s"$rel:$n"
     val builder = "SparkSession" + ".builder"
     val knob = "SPARK_GRAFT_" + "PERIODIC_GC"
     val mainHits = codeHits("src/main/scala", builder)

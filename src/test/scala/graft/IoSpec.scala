@@ -116,27 +116,17 @@ class IoSpec extends AnyFunSuite with SparkSuite {
     // one module per decision: where scratch lives (java.io.tmpdir, temp
     // dirs) is Scratch's, what SPARK_GRAFT_CHECKPOINT_DIR governs is
     // Reroot's. Comment lines may name them; code lines elsewhere may not.
-    import scala.jdk.CollectionConverters._
-    val src = new java.io.File("src/main/scala")
-    assert(src.isDirectory, s"no sources at ${src.getAbsolutePath}")
-    def scalaFiles(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(scalaFiles)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     val owners = Seq(
       "java.io.tmpdir" -> "graft/runtime/Scratch.scala",
       "createTempDirectory" -> "graft/runtime/Scratch.scala",
       "SPARK_GRAFT_CHECKPOINT_DIR" -> "graft/runtime/Reroot.scala")
-    val files = scalaFiles(src)
-    assert(files.exists(_.getName == "Scratch.scala"))
+    val lines = SourceScan.codeLines("src/main/scala")
+    assert(lines.exists(_._1 == "graft/runtime/Scratch.scala"))
     val offenders = for {
-      f <- files
-      rel = src.toPath.relativize(f.toPath).toString
-      (line, i) <- Files.readAllLines(f.toPath).asScala.zipWithIndex
-      code = line.trim
-      if !(code.startsWith("*") || code.startsWith("/*") || code.startsWith("//"))
+      (rel, n, code) <- lines
       (needle, owner) <- owners
       if rel != owner && code.contains(needle)
-    } yield s"$rel:${i + 1}: $needle outside $owner"
+    } yield s"$rel:$n: $needle outside $owner"
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

@@ -88,6 +88,26 @@ class PipelineSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("the inverted scorer is written only in Scoring, and no optimizer rule is injected") {
+    // the parity tests above check Scoring; they only check what the lanes
+    // run if no second copy of the word-join scorer exists. Comment lines
+    // may name these; code lines may not.
+    val owners = Seq(
+      "\"_common\"" -> Some("graft/sim/Scoring.scala"),
+      "\"_lsize\"" -> Some("graft/sim/Scoring.scala"),
+      "injectOptimizerRule" -> None,
+      "SparkSessionExtensions" -> None,
+      "extraOptimizations" -> None)
+    val lines = SourceScan.codeLines("src/main/scala")
+    assert(lines.exists(_._1 == "graft/sim/Scoring.scala"))
+    val offenders = for {
+      (rel, n, code) <- lines
+      (needle, owner) <- owners
+      if !owner.contains(rel) && code.contains(needle)
+    } yield s"$rel:$n: $needle ${owner.fold("in src/main")(o => s"outside $o")}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   // --- HotTopics (E3) on a hand-checkable fixture.
 
   test("HotTopicsPipeline: window sum + per-day top-k + ranked list") {

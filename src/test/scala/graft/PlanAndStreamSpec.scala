@@ -113,10 +113,15 @@ class PlanAndStreamSpec extends AnyFunSuite with SparkSuite {
     val pairs = a.crossJoin(b).limit(500)
     val both = pairs.select(
       graft.functions.VectorExpressions.floatVecDot($"x", $"y").as("native"),
-      Ann.dotCol($"x", $"y").as("fold"))
+      Ann.dotCol($"x", $"y").as("fold"),
+      graft.functions.VectorExpressions.floatVecNormSq($"x").as("nativeNormSq"),
+      Ann.dotCol($"x", $"x").as("foldNormSq"))
     val rows = both.collect()
     assert(rows.nonEmpty)
-    rows.foreach(r => assert(r.getDouble(0) === r.getDouble(1))) // bit-identical
+    rows.foreach { r => // bit-identical
+      assert(r.getDouble(0) === r.getDouble(1))
+      assert(r.getDouble(2) === r.getDouble(3))
+    }
   }
 
   test("FloatVecDot: length mismatch yields null, matching the fold form") {
@@ -129,28 +134,6 @@ class PlanAndStreamSpec extends AnyFunSuite with SparkSuite {
       Ann.dotCol($"x", $"y").as("fold")).collect()
     assert(rows(0).getDouble(0) === 11.0 && rows(0).getDouble(1) === 11.0)
     assert(rows(1).isNullAt(0) && rows(1).isNullAt(1)) // both null on mismatch
-  }
-
-  test("GraftExtensions: SQL function registration + strength-reduction rule") {
-    graft.functions.GraftExtensions.installFunctions(spark)
-    val viaSql = spark.sql(
-      "SELECT float_vec_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
-        "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d, " +
-        "float_vec_norm_sq(array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS n")
-      .collect().head
-    assert(viaSql.getDouble(0) === 11.0)
-    assert(viaSql.getDouble(1) === 25.0)
-
-    // rule: dot(x, x) -> norm_sq(x); sqrt(normsq)*sqrt(normsq) -> normsq
-    import graft.functions.VectorExpressions._
-    val e = spark.read.parquet(s"$sf/embeddings.parquet").limit(5)
-    val selfDot = e.select(floatVecDot($"embedding", $"embedding").as("s"),
-      (sqrt(floatVecNormSq($"embedding")) * sqrt(floatVecNormSq($"embedding"))).as("p"))
-    val optimized = graft.functions.VectorStrengthReduction(selfDot.queryExecution.analyzed)
-    val str = optimized.toString
-    assert(!str.contains("float_vec_dot"))
-    assert(!str.toLowerCase.contains("sqrt"))
-    assert(str.contains("float_vec_norm_sq"))
   }
 
   test("stateful streaming user profiles equal the batch aggregation") {

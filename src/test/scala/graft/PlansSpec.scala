@@ -1,88 +1,14 @@
 package graft
 
-import graft.functions.KeywordExpressions.keywordDot
-import graft.sim.{Scoring, Similarities}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The cross→inverted optimizer rewrite (SURVEY.md §4): a reference-shaped
-  * crossJoin + keyword_dot + `score > 0` plan must optimize into the
-  * inverted-index equi-join + aggregation, with identical results.
+/** Plan-shape pins: decorrelation, broadcast choices, per-side norms and
+  * the shared-stage cuts' partitioning and statistics.
   */
 class PlansSpec extends AnyFunSuite with SparkSuite {
 
   import spark.implicits._
-
-  private def profiles() = {
-    val left = Seq(
-      (1L, Seq(("alpha", 0.5), ("beta", 1.5))),
-      (2L, Seq(("gamma", 2.0))),
-      (3L, Seq(("nothing", 1.0)))
-    ).toDF("lid", "kw")
-      .select($"lid", $"kw".cast("array<struct<word:string,value:double>>").as("keywords"))
-    val right = Seq(
-      (10L, Seq(("alpha", 2.0), ("delta", 9.0))),
-      (11L, Seq(("beta", 1.0), ("gamma", 3.0))),
-      (12L, Seq(("epsilon", 4.0)))
-    ).toDF("rid", "kw")
-      .select($"rid", $"kw".cast("array<struct<word:string,value:double>>").as("keywords"))
-    (left, right)
-  }
-
-  test("CrossScoreToInvertedJoin: cross+guard plan rewrites to join+aggregate with equal results") {
-    val (left, right) = profiles()
-    val crossDf = Scoring.crossScore(left, "lid", right, "rid",
-      (a, b) => keywordDot(a, b))
-
-    // expected via the faithful UDF cross (no rule involved)
-    val expected = Scoring.crossScore(left, "lid", right, "rid",
-      (a, b) => Similarities.dotCol(a, b))
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-
-    val before = crossDf.queryExecution.optimizedPlan
-    val after = graft.plans.CrossScoreToInvertedJoin(before)
-    assert(after ne before)
-    val planStr = after.toString
-    assert(!planStr.contains("Cross"), s"cross join survived:\n$planStr")
-    assert(planStr.contains("Aggregate"))
-    assert(planStr.contains("Generate explode"))
-
-    val got = org.apache.spark.sql.graft.bridge.ofRows(spark, after)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(got.keySet === expected.keySet)
-    got.foreach { case (k, v) =>
-      assert(math.abs(v - expected(k)) < 1e-9, s"pair $k: $v vs ${expected(k)}")
-    }
-    // the no-shared-word pair (3, 12) must appear in neither
-    assert(!got.contains((3L, 12L)))
-  }
-
-  test("rule installed via experimental.extraOptimizations fires end-to-end") {
-    val (left, right) = profiles()
-    val prev = spark.experimental.extraOptimizations
-    try {
-      spark.experimental.extraOptimizations = prev :+ graft.plans.CrossScoreToInvertedJoin
-      val df = Scoring.crossScore(left, "lid", right, "rid", (a, b) => keywordDot(a, b))
-      val plan = df.queryExecution.optimizedPlan.toString
-      assert(!plan.contains("Cross"), s"rule did not fire:\n$plan")
-      assert(plan.contains("Aggregate"))
-      val got = df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-      assert(got.keySet === Set((1L, 10L), (1L, 11L), (2L, 11L)))
-      assert(math.abs(got((1L, 10L)) - 1.0) < 1e-12)  // alpha: 0.5*2.0
-      assert(math.abs(got((1L, 11L)) - 1.5) < 1e-12)  // beta: 1.5*1.0
-      assert(math.abs(got((2L, 11L)) - 6.0) < 1e-12)  // gamma: 2.0*3.0
-    } finally spark.experimental.extraOptimizations = prev
-  }
-
-  test("rule does NOT fire without the score > 0 guard (zero-score pairs would be dropped)") {
-    val (left, right) = profiles()
-    val noGuard = left.select($"lid", $"keywords".as("_lk"))
-      .crossJoin(right.select($"rid", $"keywords".as("_rk")))
-      .select($"lid", $"rid", keywordDot($"_lk", $"_rk").as("score"))
-    val before = noGuard.queryExecution.optimizedPlan
-    val after = graft.plans.CrossScoreToInvertedJoin(before)
-    assert(after.toString.contains("Join Cross") || after == before)
-  }
 
   test("q224 LATERAL top-k decorrelates: ranked join, never a per-row nested loop") {
     graft.runtime.Stage.newQueryScope()
